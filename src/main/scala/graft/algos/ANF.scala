@@ -48,8 +48,7 @@ object ANF {
                    quantile: Double, maxH: Int,
                    numPartitions: Int): (DataFrame, Int) = {
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val js = 0 until k
 
     val adj = edges.select(col("src"), col("dst"))

@@ -27,8 +27,7 @@ object BFS {
           numPartitions: Int = 0, checkpointDir: Option[String] = None,
           checkpointEvery: Int = 10): DataFrame = {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // repartition(src) BEFORE the distinct: hash(src) satisfies the dedup
     // agg's ClusteredDistribution(src,dst) (subset rule), one exchange in

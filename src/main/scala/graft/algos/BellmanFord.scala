@@ -51,31 +51,23 @@ object BellmanFord {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var dist = Iterate.cut(Seq((source, 0L)).toDF("id", "dist"))
-    var improvedLast = false
-    var iter = 0
-    while (iter < k && (iter == 0 || !detect || improvedLast)) {
-      iter += 1
-      val cand = adj.join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
-        .groupBy("id").agg(min(col("nd")).as("nd"))
-      val mergedPre = dist.join(cand, Seq("id"), "full_outer")
-        .select(col("id"),
-          when(col("dist").isNull, col("nd"))
-            .when(col("nd").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("nd"))).as("dist"),
-          (col("dist").isNull || (col("nd").isNotNull && col("nd") < col("dist")))
-            .as("chg"))
-        .observe(s"bf_$iter", sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-      // cut the OBSERVED frame itself (observedLong contract) — chg rides
-      // along in the leaf and is ignored by the next round's joins
-      val merged = Iterate.cut(mergedPre)
-      improvedLast = Iterate.observedLong(mergedPre, s"bf_$iter")(
-        merged.filter(col("chg")).count()) > 0
-      Iterate.free(dist)
-      dist = merged
-    }
+    // chg rides along in the state and is ignored by the next round's joins
+    val fp = Iterate.fixpoint(Seq((source, 0L)).toDF("id", "dist"), 0, Nil, k,
+        metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("n"))) {
+      (dist, _, _) =>
+        val cand = adj.join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
+          .groupBy("id").agg(min(col("nd")).as("nd"))
+        dist.join(cand, Seq("id"), "full_outer")
+          .select(col("id"),
+            when(col("dist").isNull, col("nd"))
+              .when(col("nd").isNull, col("dist"))
+              .otherwise(least(col("dist"), col("nd"))).as("dist"),
+            (col("dist").isNull || (col("nd").isNotNull && col("nd") < col("dist")))
+              .as("chg"))
+    } { (_, row) => detect && Iterate.long(row, 0) == 0L }
+    val improvedLast = fp.trace.lastOption.exists(s => Iterate.long(s.row, 0) > 0L)
     adj.unpersist(false)
-    (dist.select(col("id"), col("dist")), detect && improvedLast)
+    (fp.state.select(col("id"), col("dist")), detect && improvedLast)
   }
 }

@@ -36,8 +36,7 @@ object Bipartite {
 
   private def loop(spark: SparkSession, edges: DataFrame, maxIter: Int,
                    numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -48,38 +47,28 @@ object Bipartite {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var state = Iterate.cutKeyed(
-      und.select(col("src").as("id")).distinct()
+    val state = Iterate.fixpoint(und.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("comp"), lit(0L).as("dist")),
-      parts, "id")
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val labT = state.select(
-        col("id").as("src"), col("comp").as("c"), col("dist").as("dd"))
-      // lexicographic neighbor min over (label, dist+1) — struct min keeps
-      // it one aggregate, order-insensitive, skew-safe like CC's scalar min
-      val nm = und.join(labT, Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(struct(col("c"), (col("dd") + 1L).as("dd"))).as("cand"))
-      val takes = coalesce(
-        col("cand.c") < col("comp") ||
-          (col("cand.c") === col("comp") && col("cand.dd") < col("dist")),
-        lit(false))
-      val merged = state.join(nm, Seq("id"), "left")
-        .select(col("id"),
-          when(takes, col("cand.c")).otherwise(col("comp")).as("comp"),
-          when(takes, col("cand.dd")).otherwise(col("dist")).as("dist"),
-          takes.as("chg"))
-        .observe(s"bip_$iter",
-          sum(when(col("chg"), 1L).otherwise(0L)).as("changed"))
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      changed = Iterate.observedLong(merged, s"bip_$iter")(
-        next.filter(col("chg")).count())
-      Iterate.free(state)
-      state = next
-      iter += 1
-    }
+      parts, Seq("id"), maxIter,
+      metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("changed"))) {
+      (state, _, _) =>
+        val labT = state.select(
+          col("id").as("src"), col("comp").as("c"), col("dist").as("dd"))
+        // lexicographic neighbor min over (label, dist+1) — struct min keeps
+        // it one aggregate, order-insensitive, skew-safe like CC's scalar min
+        val nm = und.join(labT, Seq("src"))
+          .groupBy(col("dst").as("id"))
+          .agg(min(struct(col("c"), (col("dd") + 1L).as("dd"))).as("cand"))
+        val takes = coalesce(
+          col("cand.c") < col("comp") ||
+            (col("cand.c") === col("comp") && col("cand.dd") < col("dist")),
+          lit(false))
+        state.join(nm, Seq("id"), "left")
+          .select(col("id"),
+            when(takes, col("cand.c")).otherwise(col("comp")).as("comp"),
+            when(takes, col("cand.dd")).otherwise(col("dist")).as("dist"),
+            takes.as("chg"))
+    } { (_, row) => Iterate.long(row, 0) == 0L }.state
 
     val side = state.select(col("id"), col("comp"), (col("dist") % 2).as("side"))
     val odd = canon

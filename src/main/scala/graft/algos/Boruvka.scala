@@ -40,8 +40,7 @@ object Boruvka {
 
   private def loop(spark: SparkSession, edges: DataFrame,
                    numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // canonical weighted edges: a<b, min weight per pair
     val canon0 = edges.select(

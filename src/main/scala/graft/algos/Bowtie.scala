@@ -41,8 +41,7 @@ object Bowtie {
 
   private def runImpl(spark: SparkSession, edges: DataFrame,
                       numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()

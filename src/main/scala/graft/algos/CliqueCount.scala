@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Iterate
 
 /** 4-clique counting — the next rung of the subgraph-census ladder after
   * triangles ([[TriangleCount]], SandiaDot2 semantics) and butterflies
@@ -27,8 +28,7 @@ object CliqueCount {
     */
   def fourCliques(spark: SparkSession, edges: DataFrame,
                   numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))

@@ -104,9 +104,9 @@ object ConnectedComponents {
           numPartitions: Int, skewSalts: Int,
           checkpointDir: Option[String], checkpointEvery: Int,
           fastsv: Boolean): (DataFrame, Int) = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val snapshots = Iterate.Snapshots(checkpointDir, checkpointEvery,
+      Seq("id", "comp"), log = row => Seq("changed" -> Iterate.long(row, 0)))
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // symmetrize; structure only. repartition(src) BEFORE the distinct:
     // hash(src) satisfies the dedup agg's ClusteredDistribution(src,dst)
@@ -138,17 +138,10 @@ object ConnectedComponents {
       case None => und.select(col("src").as("id"))
       case Some(h) => und.select(col("src").as("id")).union(h.select(col("src").as("id")))
     }).distinct()
-    // labels is referenced twice per iteration (gather + merge): cut() keeps
-    // the plan leaf-sized across the fixpoint loop (graft.core.Iterate)
-    val (startIter, l0) = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, Seq("id", "comp")))
-      .getOrElse((0, vertices.select(col("id"), col("id").as("comp"))))
-    var labels = Iterate.cutKeyed(l0, parts, "id")
-
-    var iter = startIter
-    var changed = 1L
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    val fp = Iterate.fixpoint(vertices.select(col("id"), col("id").as("comp")),
+      parts, Seq("id"), maxIter,
+      metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("changed")),
+      checkpoint = snapshots) { (labels, _, _) =>
       // neighbor-min gather: min.second semiring vxm over the adjacency
       val labT = labels.select(col("id").as("src"), col("comp").as("c"))
       val gathered = undHot match {
@@ -159,14 +152,11 @@ object ConnectedComponents {
       val neighborMin = gathered
         .groupBy(col("dst").as("id")).agg(min(col("c")).as("nmin"))
 
-      // changed-count observed during the state materialization itself
-      // (CollectMetrics) — no separate per-iteration count job
-      val merged = if (!fastsv) {
+      if (!fastsv) {
         labels.join(neighborMin, Seq("id"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
             (col("nmin") < col("comp")).as("chg"))
-          .observe(s"cc_$iter", sum(when(col("chg"), 1L).otherwise(0L)).as("changed"))
       } else {
         // FastSV round. Invariant: every comp value is the id of a vertex in
         // the same component (initially itself; hook/shortcut only move along
@@ -191,24 +181,9 @@ object ConnectedComponents {
             col("comp0"))
           .withColumn("chg", col("comp") < col("comp0"))
           .select(col("id"), col("comp"), col("chg"))
-          .observe(s"cc_$iter", sum(when(col("chg"), 1L).otherwise(0L)).as("changed"))
       }
-      // cut the SAME frame whose qe carries the metrics accumulator (a
-      // derived select would re-plan and execute a different CollectMetrics)
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      changed = Iterate.observedLong(merged, s"cc_$iter")(
-        next.filter(col("chg")).count())
-      Iterate.free(labels)
-      labels = next
-      iter += 1
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "iter" -> iter.toLong,
-          "changed" -> changed, "millis" -> (System.nanoTime() - t0) / 1000000)
-        if (iter % checkpointEvery == 0 || changed == 0 || iter == maxIter)
-          graft.core.Checkpoint.write(labels.select(col("id"), col("comp")), dir, iter)
-      }
-    }
+    } { (_, row) => Iterate.long(row, 0) == 0 }
     und.unpersist(false); undHot.foreach(_.unpersist(false))
-    (labels.select(col("id"), col("comp")), iter - startIter)
+    (fp.state.select(col("id"), col("comp")), fp.trace.size)
   }
 }

@@ -32,8 +32,7 @@ object DensestSubgraph {
 
   private def loop(spark: SparkSession, edges: DataFrame, rounds: Int,
                    numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     var e = Iterate.cutKeyed(edges.select(
         least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))

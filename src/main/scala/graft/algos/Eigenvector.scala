@@ -27,8 +27,7 @@ object Eigenvector {
   private def loop(spark: SparkSession, edges: DataFrame, k: Int,
                    numPartitions: Int): DataFrame = {
     require(k >= 1, "need at least one iteration")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -41,20 +40,18 @@ object Eigenvector {
       und.select(col("src").as("id")).distinct(), parts, "id")
     val n = verts.count()
 
-    var x = Iterate.cutKeyed(
-      verts.select(col("id"), (lit(1.0) / n).as("x")), parts, "id")
-    for (_ <- 1 to k) {
+    // the L1 normalisation is an aggregate over the step's own output, so
+    // it runs inside the step (one job) before the cut
+    val x = Iterate.fixpoint(verts.select(col("id"), (lit(1.0) / n).as("x")),
+        parts, Seq("id"), k) { (x, _, _) =>
       val gathered = und
         .join(x.select(col("id").as("src"), col("x").as("xs")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("xs")).as("s"))
       val pre = verts.join(gathered, Seq("id"), "left")
         .select(col("id"), coalesce(col("s"), lit(0.0)).as("s"))
       val l1 = pre.agg(sum(col("s"))).head.getDouble(0)
-      val next = Iterate.cutKeyed(
-        pre.select(col("id"), (col("s") / l1).as("x")), parts, "id")
-      Iterate.free(x)
-      x = next
-    }
+      pre.select(col("id"), (col("s") / l1).as("x"))
+    } { (_, _) => false }.state
     und.unpersist(false)
     x.select(col("id"), col("x").as("eig"))
   }

@@ -41,8 +41,7 @@ object Fiedler {
   private def loop(spark: SparkSession, edges: DataFrame, k: Int,
                    numPartitions: Int): DataFrame = {
     require(k >= 1, "need at least one iteration")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))

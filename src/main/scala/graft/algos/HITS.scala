@@ -36,8 +36,7 @@ object HITS {
   private def loop(spark: SparkSession, edges: DataFrame, k: Int,
                    numPartitions: Int): DataFrame = {
     require(k >= 1, "HITS needs k >= 1 iterations")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val e = edges.select(col("src"), col("dst")).distinct()
     val bySrc = e.repartition(parts, col("src")).persist(StorageLevel.MEMORY_AND_DISK)

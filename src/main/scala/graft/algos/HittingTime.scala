@@ -32,8 +32,7 @@ object HittingTime {
                    k: Int, numPartitions: Int): DataFrame = {
     require(k >= 1, "need at least one step")
     require(seeds.nonEmpty, "need a seed set")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -47,20 +46,15 @@ object HittingTime {
       parts, "id")
     val isSeed = col("id").isin(seeds: _*)
 
-    var h = Iterate.cutKeyed(
-      deg.select(col("id"), lit(0.0).as("h")), parts, "id")
-    for (_ <- 1 to k) {
+    val h = Iterate.fixpoint(deg.select(col("id"), lit(0.0).as("h")),
+        parts, Seq("id"), k) { (h, _, _) =>
       val gathered = und
         .join(h.select(col("id").as("src"), col("h").as("hs")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("hs")).as("g"))
-      val next = Iterate.cutKeyed(
-        deg.join(gathered, Seq("id"), "left")
-          .select(col("id"), when(isSeed, 0.0)
-            .otherwise(lit(1.0) + coalesce(col("g"), lit(0.0)) / col("d")).as("h")),
-        parts, "id")
-      Iterate.free(h)
-      h = next
-    }
+      deg.join(gathered, Seq("id"), "left")
+        .select(col("id"), when(isSeed, 0.0)
+          .otherwise(lit(1.0) + coalesce(col("g"), lit(0.0)) / col("d")).as("h"))
+    } { (_, _) => false }.state
     und.unpersist(false)
     h
   }

@@ -26,40 +26,35 @@ object KCore {
   def run(spark: SparkSession, edges: DataFrame, k: Int, maxIter: Int = 100,
           numPartitions: Int = 0): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var canon = Iterate.cut(edges.select(
-        least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .repartition(parts, col("lo")))
-    var nvals = canon.count()
-    var stable = nvals == 0
-    var iter = 0
-    while (!stable && iter < maxIter) {
-      val (kept, newN) = round(canon, k)
-      stable = newN == nvals
-      canon = kept
-      nvals = newN
-      iter += 1
-    }
+    core(spark, edges, k, maxIter, numPartitions)
+  }
+
+  /** Fixed-round variant: at most `rounds` peel rounds of [[run]] — the
+    * SQL-oracle-checkable unrolled form. A round that keeps every edge is a
+    * fixpoint, so stopping there gives exactly the core of all `rounds`
+    * rounds.
+    */
+  def runFixed(spark: SparkSession, edges: DataFrame, k: Int, rounds: Int,
+               numPartitions: Int = 0): DataFrame =
+    core(spark, edges, k, rounds, numPartitions)
+
+  private def core(spark: SparkSession, edges: DataFrame, k: Int,
+                   maxIter: Int, numPartitions: Int): DataFrame = {
+    val edgeCount = count(lit(1)).as("n")
+    val canon = Iterate.fixpoint(canonical(spark, edges, numPartitions),
+        0, Nil, maxIter, metrics = Seq(edgeCount), initMetrics = Seq(edgeCount)) {
+      (canon, _, _) => peel(canon, k)
+    } { (prev, row) => Iterate.long(row, 0) == Iterate.long(prev, 0) }.state
     degrees(canon).filter(col("core_deg") >= k)
   }
 
-  /** Fixed-round variant — exactly `rounds` peel rounds, no fixpoint
-    * detection: the SQL-oracle-checkable unrolled form (converged rounds
-    * are no-ops, so engine and unrolled oracle agree by construction).
-    */
-  def runFixed(spark: SparkSession, edges: DataFrame, k: Int, rounds: Int,
-               numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var canon = Iterate.cut(edges.select(
+  /** Simple undirected canonical edges (lo < hi), laid out by lo. */
+  private def canonical(spark: SparkSession, edges: DataFrame,
+                        numPartitions: Int): DataFrame =
+    edges.select(
         least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
-      .repartition(parts, col("lo")))
-    for (_ <- 1 to rounds) canon = round(canon, k)._1
-    degrees(canon).filter(col("core_deg") >= k)
-  }
+      .repartition(Iterate.partitions(spark, numPartitions), col("lo"))
 
   private def degrees(canon: DataFrame): DataFrame =
     canon.select(col("lo").as("id"))
@@ -67,16 +62,23 @@ object KCore {
       .groupBy("id").agg(count(lit(1)).as("core_deg"))
 
   /** One peel round: drop every edge with an endpoint of degree < k. */
-  private def round(canon: DataFrame, k: Int): (DataFrame, Long) = {
+  private def peel(canon: DataFrame, k: Int): DataFrame = {
     val keep = degrees(canon).filter(col("core_deg") >= k).select(col("id"))
-    val keptPre = canon
+    canon
       .join(keep.select(col("id").as("lo")), Seq("lo"), "left_semi")
       .join(keep.select(col("id").as("hi")), Seq("hi"), "left_semi")
       .select(col("lo"), col("hi"))
-      .observe(s"kcore_${System.identityHashCode(canon)}", count(lit(1)).as("n"))
+  }
+
+  /** [[peel]] for [[coreness]]'s own loop: the cut surviving edges and their
+    * count, observed during the cut pass (no extra job). Frees the superseded
+    * state.
+    */
+  private def round(canon: DataFrame, k: Int): (DataFrame, Long) = {
+    val name = s"kcore_${System.identityHashCode(canon)}"
+    val keptPre = peel(canon, k).observe(name, count(lit(1)).as("n"))
     val kept = Iterate.cut(keptPre)
-    val n = Iterate.observedLong(
-      keptPre, s"kcore_${System.identityHashCode(canon)}")(kept.count())
+    val n = Iterate.observedLong(keptPre, name)(kept.count())
     Iterate.free(canon)
     (kept, n)
   }
@@ -89,12 +91,7 @@ object KCore {
     */
   def coreness(spark: SparkSession, edges: DataFrame, maxK: Int = 1000,
                numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var canon = Iterate.cut(edges.select(
-        least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .repartition(parts, col("lo")))
+    var canon = Iterate.cut(canonical(spark, edges, numPartitions))
     var nvals = canon.count()
     // vertices with no surviving edge at level k have coreness k-1; isolated
     // inputs never appear (edge-derived universe), matching the convention

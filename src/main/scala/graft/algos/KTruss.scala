@@ -20,73 +20,54 @@ object KTruss {
           numPartitions: Int = 0, checkpointDir: Option[String] = None,
           checkpointEvery: Int = 10): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+    val edgeCount = count(lit(1)).as("n")
     // the loop state IS the surviving edge set, so the snapshot is the
     // canonical (lo,hi) table; resuming simply continues peeling from it
     // (the filter is monotone — rounds already applied are never re-done)
-    val resumed = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, Seq("lo", "hi"), s"k=$k"))
-    var canon = resumed.map(r => canonicalize(spark,
-        r._2.select(col("lo").as("src"), col("hi").as("dst")), numPartitions))
-      .getOrElse(canonicalize(spark, edges, numPartitions))
-    var nvals = canon.count()
-    var iter = resumed.map(_._1).getOrElse(0)
-    var stable = false
-    while (!stable && iter < maxIter && nvals > 0) {
-      val t0 = System.nanoTime()
-      val (kept, newN) = round(canon, k)
-      stable = newN == nvals
-      canon = kept
-      nvals = newN
-      iter += 1
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "iter" -> iter.toLong,
-          "edges" -> nvals, "millis" -> (System.nanoTime() - t0) / 1000000)
-        if (iter % checkpointEvery == 0 || stable || iter == maxIter)
-          graft.core.Checkpoint.write(canon.select(col("lo"), col("hi")),
-            dir, iter, s"k=$k")
-      }
-    }
-    canon
+    Iterate.fixpoint(canonical(spark, edges, numPartitions), 0, Nil,
+        maxIter, metrics = Seq(edgeCount), initMetrics = Seq(edgeCount),
+        checkpoint = Iterate.Snapshots(checkpointDir, checkpointEvery,
+          Seq("lo", "hi"), tag = s"k=$k",
+          log = row => Seq("edges" -> Iterate.long(row, 0)),
+          resume = r => canonical(spark,
+            r.select(col("lo").as("src"), col("hi").as("dst")), numPartitions))) {
+      (canon, _, _) => peel(canon, k)
+    } { (prev, row) =>
+      Iterate.long(row, 0) == Iterate.long(prev, 0) || Iterate.long(row, 0) == 0L
+    }.state
   }
 
-  /** Fixed-round variant: exactly `rounds` support-filter rounds, no
-    * fixpoint detection — the SQL-oracle-checkable unrolled form (same
-    * per-round math; converged rounds are no-ops, so the Spark query and the
-    * unrolled oracle agree by construction).
+  /** Fixed-round variant: at most `rounds` support-filter rounds of [[run]]
+    * — the SQL-oracle-checkable unrolled form. A round that keeps every edge
+    * is a fixpoint, so stopping there gives exactly the edges of all
+    * `rounds` rounds.
     */
   def runFixed(spark: SparkSession, edges: DataFrame, k: Int, rounds: Int,
-               numPartitions: Int = 0): DataFrame = {
-    require(k >= 3, "k-truss needs k >= 3")
-    var canon = canonicalize(spark, edges, numPartitions)
-    for (_ <- 1 to rounds) canon = round(canon, k)._1
-    canon
-  }
+               numPartitions: Int = 0): DataFrame =
+    run(spark, edges, k, maxIter = rounds, numPartitions = numPartitions)
 
-  /** Simple undirected canonical edges, cut (it is referenced 4x per round:
-    * 3x in edgeSupport + the semi-join — graft.core.Iterate).
-    */
-  private def canonicalize(spark: SparkSession, edges: DataFrame,
-                           numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    Iterate.cut(edges.select(
+  /** Simple undirected canonical edges (lo < hi), laid out by lo. */
+  private def canonical(spark: SparkSession, edges: DataFrame,
+                        numPartitions: Int): DataFrame =
+    edges.select(
         least(col("src"), col("dst")).as("lo"), greatest(col("src"), col("dst")).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
-      .repartition(parts, col("lo")))
-  }
+      .repartition(Iterate.partitions(spark, numPartitions), col("lo"))
 
-  /** One support-filter round; the surviving-edge count is observed during
-    * the cut pass (no extra job). Frees the superseded state.
+  /** One support-filter round: the edges with support >= k-2. */
+  private def peel(canon: DataFrame, k: Int): DataFrame =
+    canon.join(TriangleCount.edgeSupport(canon).filter(col("support") >= k - 2),
+      Seq("lo", "hi"), "left_semi")
+
+  /** [[peel]] for [[trussness]]'s own loop: the cut surviving edges and their
+    * count, observed during the cut pass (no extra job). Frees the superseded
+    * state.
     */
   private def round(canon: DataFrame, k: Int): (DataFrame, Long) = {
-    val support = TriangleCount.edgeSupport(canon)
-    val keptPre = canon.join(
-        support.filter(col("support") >= k - 2), Seq("lo", "hi"), "left_semi")
-      .observe(s"ktruss_${System.identityHashCode(canon)}", count(lit(1)).as("n"))
+    val name = s"ktruss_${System.identityHashCode(canon)}"
+    val keptPre = peel(canon, k).observe(name, count(lit(1)).as("n"))
     val kept = Iterate.cut(keptPre)
-    val n = Iterate.observedLong(
-      keptPre, s"ktruss_${System.identityHashCode(canon)}")(kept.count())
+    val n = Iterate.observedLong(keptPre, name)(kept.count())
     Iterate.free(canon)
     (kept, n)
   }
@@ -100,7 +81,7 @@ object KTruss {
     */
   def trussness(spark: SparkSession, edges: DataFrame, maxK: Int = 1000,
                 numPartitions: Int = 0): DataFrame = {
-    var canon = canonicalize(spark, edges, numPartitions)
+    var canon = Iterate.cut(canonical(spark, edges, numPartitions))
     var nvals = canon.count()
     // level-start snapshot, persisted + materialized BEFORE round() frees
     // the canon leaf it projects from (same contract as KCore.coreness)

@@ -29,8 +29,7 @@ object Katz {
   private def loop(spark: SparkSession, edges: DataFrame, k: Int,
                    alpha: Double, beta: Double, numPartitions: Int): DataFrame = {
     require(k >= 1, "need at least one term")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
@@ -42,19 +41,15 @@ object Katz {
     val verts = Iterate.cutKeyed(
       und.select(col("src").as("id")).distinct(), parts, "id")
 
-    var x = Iterate.cutKeyed(verts.select(col("id"), lit(beta).as("x")), parts, "id")
-    for (_ <- 1 to k) {
+    val x = Iterate.fixpoint(verts.select(col("id"), lit(beta).as("x")),
+        parts, Seq("id"), k) { (x, _, _) =>
       val gathered = und
         .join(x.select(col("id").as("src"), col("x").as("xs")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("xs")).as("s"))
-      val next = Iterate.cutKeyed(
-        verts.join(gathered, Seq("id"), "left")
-          .select(col("id"),
-            (lit(beta) + lit(alpha) * coalesce(col("s"), lit(0.0))).as("x")),
-        parts, "id")
-      Iterate.free(x)
-      x = next
-    }
+      verts.join(gathered, Seq("id"), "left")
+        .select(col("id"),
+          (lit(beta) + lit(alpha) * coalesce(col("s"), lit(0.0))).as("x"))
+    } { (_, _) => false }.state
     und.unpersist(false)
     x.select(col("id"), col("x").as("katz"))
   }

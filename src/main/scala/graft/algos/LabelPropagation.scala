@@ -33,9 +33,9 @@ object LabelPropagation {
   private def runLoop(spark: SparkSession, edges: DataFrame, maxIter: Int,
           numPartitions: Int,
           checkpointDir: Option[String], checkpointEvery: Int): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val snapshots = Iterate.Snapshots(checkpointDir, checkpointEvery,
+      Seq("id", "label"), log = row => Seq("changed" -> Iterate.long(row, 0)))
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // repartition(src) FIRST: hash(src) satisfies the distinct agg's
     // ClusteredDistribution(src,dst) (subset rule), so symmetrize+dedup is
@@ -53,16 +53,10 @@ object LabelPropagation {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val vertices = und.select(col("src").as("id")).distinct()
-    // labels is referenced twice per iteration: cut() keeps plans leaf-sized
-    val (startIter, l0) = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, Seq("id", "label")))
-      .getOrElse((0, vertices.select(col("id"), col("id").as("label"))))
-    var labels = Iterate.cutKeyed(l0, parts, "id")
-
-    var iter = startIter
-    var changed = 1L
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
+    val fp = Iterate.fixpoint(vertices.select(col("id"), col("id").as("label")),
+      parts, Seq("id"), maxIter,
+      metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("changed")),
+      checkpoint = snapshots) { (labels, _, _) =>
       // histogram of neighbor labels per vertex...
       val hist = und
         .join(labels.select(col("id").as("src"), col("label").as("l")), Seq("src"))
@@ -72,61 +66,20 @@ object LabelPropagation {
       val best = hist.groupBy(col("dst").as("id"))
         .agg(max(struct(col("cnt"), negate(col("l")).as("nl"))).as("m"))
         .select(col("id"), negate(col("m.nl")).as("nlabel"))
-
-      // changed-count observed during the state materialization (no extra job)
-      val merged = labels.join(best, Seq("id"), "left")
+      labels.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("nlabel"), col("label")).as("label"),
           (coalesce(col("nlabel"), col("label")) =!= col("label")).as("chg"))
-        .observe(s"lpa_$iter", sum(when(col("chg"), 1L).otherwise(0L)).as("changed"))
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      changed = Iterate.observedLong(merged, s"lpa_$iter")(
-        next.filter(col("chg")).count())
-      Iterate.free(labels)
-      labels = next
-      iter += 1
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "iter" -> iter.toLong,
-          "changed" -> changed, "millis" -> (System.nanoTime() - t0) / 1000000)
-        if (iter % checkpointEvery == 0 || changed == 0 || iter == maxIter)
-          graft.core.Checkpoint.write(labels.select(col("id"), col("label")), dir, iter)
-      }
-    }
+    } { (_, row) => Iterate.long(row, 0) == 0 }
     und.unpersist(false)
-    labels.select(col("id"), col("label"))
+    fp.state.select(col("id"), col("label"))
   }
 
-  /** Fixed-iteration-count variant: exactly `k` synchronous rounds, no
-    * convergence action — the SQL-oracle-checkable unrolled form (same shape
-    * as PageRank.runFixed). Identical per-round math to run(); converged
-    * rounds are no-ops, so k >= the fixpoint depth gives the fixpoint.
+  /** Fixed-iteration-count variant: at most `k` synchronous rounds of
+    * [[run]] — the SQL-oracle-checkable unrolled form (same shape as
+    * PageRank.runFixed). A round that changes no label is a fixpoint, so
+    * stopping there gives exactly the labels of all `k` rounds.
     */
   def runFixed(spark: SparkSession, edges: DataFrame, k: Int,
-               numPartitions: Int = 0): DataFrame = Iterate.withoutAQE(spark) {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // same src-keyed one-exchange layout as runLoop (see the comment there)
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(parts, col("src"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vertices = und.select(col("src").as("id")).distinct()
-    var labels = Iterate.cutKeyed(
-      vertices.select(col("id"), col("id").as("label")), parts, "id")
-    for (_ <- 1 to k) {
-      val hist = und
-        .join(labels.select(col("id").as("src"), col("label").as("l")), Seq("src"))
-        .groupBy(col("dst"), col("l")).agg(count(lit(1)).as("cnt"))
-      val best = hist.groupBy(col("dst").as("id"))
-        .agg(max(struct(col("cnt"), negate(col("l")).as("nl"))).as("m"))
-        .select(col("id"), negate(col("m.nl")).as("nlabel"))
-      val next = Iterate.cutKeyed(labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nlabel"), col("label")).as("label")),
-        parts, "id")
-      Iterate.free(labels)
-      labels = next
-    }
-    und.unpersist(false)
-    labels.select(col("id"), col("label"))
-  }
+               numPartitions: Int = 0): DataFrame =
+    run(spark, edges, maxIter = k, numPartitions = numPartitions)
 }

@@ -68,8 +68,7 @@ object Louvain {
     */
   def level1(spark: SparkSession, edges: DataFrame, rounds: Int = 6,
              numPartitions: Int = 0): DataFrame = Iterate.withoutAQE(spark) {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val w0 = if (edges.columns.contains("w")) col("w").cast("long") else lit(1L)
     val g = Iterate.cutKeyed(
       edges.select(least(col("src"), col("dst")).as("a"),
@@ -91,8 +90,7 @@ object Louvain {
   private def levels(spark: SparkSession, edges: DataFrame, maxRounds: Int,
                      maxLevels: Int, numPartitions: Int,
                      localThreshold: Long): (DataFrame, Int) = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // level-0 graph: canonical a<=b, integral weights (w column optional)
     val w0 = if (edges.columns.contains("w")) col("w").cast("long") else lit(1L)

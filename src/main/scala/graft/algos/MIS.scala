@@ -59,10 +59,10 @@ object MIS {
           numPartitions: Int,
           checkpointDir: Option[String], checkpointEvery: Int,
           scoreFn: Option[(DataFrame, Int, Long) => DataFrame]): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val stateCols = Seq("id", "deg", "cand", "inSet")
+    val snapshots = Iterate.Snapshots(checkpointDir, checkpointEvery, stateCols,
+      tag = s"seed=$seed", log = row => Seq("candidates" -> Iterate.long(row, 0)))
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val und = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -75,24 +75,20 @@ object MIS {
       .join(deg, Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
 
-    // one unified state vector (id, deg, cand, inSet) — the checkpoint unit
-    val (startIter, s0) = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, stateCols, tag = s"seed=$seed"))
-      .getOrElse((0,
-        vertices.select(col("id"), col("deg"), lit(true).as("cand"), lit(false).as("inSet"))))
-    var state = Iterate.cutKeyed(s0, parts, "id")
-    var iter = startIter
-    var nCand = -1L // unknown until the first observed materialization
     // stall-reseed salt (mis.m:70-73 redraws scores on a stalled round): a
     // round that selects NO winner while candidates remain — only possible
     // when adjacent candidates drew EQUAL scores (strict > on both sides) —
     // bumps the salt, changing every subsequent draw. salt=0 leaves the
     // score stream identical to the unsalted one, so normal runs reproduce.
     var salt = 0L
-
-    while (nCand != 0L && iter < maxIter) {
-      iter += 1
-      val t0 = System.nanoTime()
+    // one unified state vector (id, deg, cand, inSet) — the checkpoint unit
+    val fp = Iterate.fixpoint(vertices.select(col("id"), col("deg"),
+        lit(true).as("cand"), lit(false).as("inSet")), parts, Seq("id"), maxIter,
+      metrics = Seq(sum(when(col("cand"), 1L).otherwise(0L)).as("ncand"),
+        sum(when(col("wonNow"), 1L).otherwise(0L)).as("nwon")),
+      checkpoint = snapshots) { (state, iter, prev) =>
+      if (prev.length > 0 && Iterate.long(prev, 1) == 0L && Iterate.long(prev, 0) > 0L)
+        salt += 1L // the previous round stalled: reseed draws
       // deterministic "random" score; strictly positive, distinct w.h.p.
       val scored = scoreFn match {
         case Some(f) => f(state.filter(col("cand")), iter, salt)
@@ -117,34 +113,14 @@ object MIS {
           .select(col("dst").as("id"))).distinct()
         .select(col("id"), lit(true).as("rm"))
 
-      // single merged state update; remaining-candidate count observed during
-      // the SAME materialization pass (CollectMetrics — no extra count job)
-      val merged = state
+      state
         .join(winners, Seq("id"), "left").join(removed, Seq("id"), "left")
         .select(col("id"), col("deg"),
           (col("cand") && col("rm").isNull).as("cand"),
           (col("inSet") || coalesce(col("won"), lit(false))).as("inSet"),
           coalesce(col("won"), lit(false)).as("wonNow"))
-        .observe(s"mis_$iter", sum(when(col("cand"), 1L).otherwise(0L)).as("ncand"),
-          sum(when(col("wonNow"), 1L).otherwise(0L)).as("nwon"))
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      val row = Iterate.observedRow(merged, s"mis_$iter")(
-        next.agg(sum(when(col("cand"), 1L).otherwise(0L)),
-          sum(when(col("wonNow"), 1L).otherwise(0L))).head)
-      nCand = if (row.isNullAt(0)) 0L else row.getLong(0)
-      val nWon = if (row.isNullAt(1)) 0L else row.getLong(1)
-      if (nWon == 0L && nCand > 0L) salt += 1L // stalled round: reseed draws
-      Iterate.free(state)
-      state = next
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "iter" -> iter.toLong,
-          "candidates" -> nCand, "millis" -> (System.nanoTime() - t0) / 1000000)
-        if (iter % checkpointEvery == 0 || nCand == 0L || iter == maxIter)
-          graft.core.Checkpoint.write(state.select(stateCols.map(col): _*), dir, iter,
-            tag = s"seed=$seed")
-      }
-    }
+    } { (_, row) => Iterate.long(row, 0) == 0L }
     und.unpersist(false)
-    state.select(col("id"), col("inSet"))
+    fp.state.select(col("id"), col("inSet"))
   }
 }

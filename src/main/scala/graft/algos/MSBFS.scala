@@ -29,8 +29,7 @@ object MSBFS {
           maxIter: Int = 10000, numPartitions: Int = 0): DataFrame = {
     require(sources.nonEmpty, "msbfs needs at least one source")
     require(sources.distinct.size == sources.size, "duplicate sources")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -56,8 +55,7 @@ object MSBFS {
     */
   def runFrom(spark: SparkSession, edges: DataFrame, sources: DataFrame,
               maxIter: Int = 10000, numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()

@@ -49,8 +49,7 @@ object Matching {
 
   private def loop(spark: SparkSession, edges: DataFrame, maxIter: Int,
                    numPartitions: Int): (DataFrame, Int) = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Iterate
 
 /** Deterministic SECOND-ORDER biased walks — node2vec (Grover & Leskovec,
   * KDD 2016) sampling with the same Lehmer-slot arithmetic as
@@ -42,8 +43,7 @@ object Node2Vec {
           outWgt: Long = 4L, numPartitions: Int = 0): DataFrame = {
     require(steps >= 1, "need at least one step")
     require(retWgt > 0 && commonWgt > 0 && outWgt > 0, "weights must be positive")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))

@@ -23,9 +23,8 @@ import graft.core.Iterate
   * action: a fused aggregate computing the inf-norm delta AND the next
   * iteration's sink mass in the same pass (the analogue of the reference's
   * in-place dense accumulation, GB_AxB_dot4.c — no extra sweep over the
-  * dense vector). Lineage is cut every `checkpointEvery` iterations via an
-  * eager localCheckpoint; when `checkpointDir` is set the vertex state is
-  * also written to parquet with per-partition lineage and `run` resumes from
+  * dense vector). The state is cut every iteration (Iterate.fixpoint); when
+  * `checkpointDir` is set the vertex state is also written to parquet with per-partition lineage and `run` resumes from
   * the newest complete checkpoint (the north rule's resumable checkpoints).
   */
 object PageRank {
@@ -84,9 +83,11 @@ object PageRank {
           numPartitions: Int, skewSalts: Int,
           weighted: Boolean, seeds: Seq[Long], grouped: Boolean,
           groupCap: Int): Result = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
+    val snapshots = Iterate.Snapshots(checkpointDir, checkpointEvery, Seq("id", "r"),
+      tag = f"damp=$damp%.4f" +
+        (if (seeds.isEmpty) "" else s";seeds=${seeds.sorted.mkString("_")}"),
+      log = row => Seq("delta_e9" -> (getD(row, "delta") * 1e9).toLong))
 
     // edges partitioned by src and cached: the loop's reusable CSR side
     // (reference keeps A by-row; we keep the partitioning); unweighted runs
@@ -129,8 +130,6 @@ object PageRank {
     // personalized: teleport mass (and sink redistribution) lands on the
     // seed set only — the per-row base is a tiny isin literal, not a join
     val isSeed = if (seeds.isEmpty) lit(true) else col("id").isin(seeds: _*)
-    val tag = f"damp=$damp%.4f" +
-      (if (seeds.isEmpty) "" else s";seeds=${seeds.sorted.mkString("_")}")
 
     // hub-src skew (graft.core.Skew hot-key isolation): cold edges keep the
     // src partitioning (co-partitioned with the state, zero exchange); the
@@ -191,110 +190,75 @@ object PageRank {
       (g, rest)
     }
 
-    // resume from newest complete checkpoint if present; PPR starts from the
-    // seed distribution itself (pagerank.m:60 starts uniform; with a seeded
-    // teleport the analogous start is the teleport distribution)
+    // PPR starts from the seed distribution itself (pagerank.m:60 starts
+    // uniform; with a seeded teleport the analogous start is the teleport
+    // distribution)
     val initR = if (seeds.isEmpty) lit(1.0 / n)
                 else when(isSeed, lit(1.0 / nSeeds)).otherwise(lit(0.0))
-    val resumed = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, Seq("id", "r"), tag))
-    val startIter = resumed.map(_._1).getOrElse(0)
+    val sinkMass = sum(when(col("isSink"), col("r"))).as("sinkMass")
 
-    // state = (id, r, d, isSink), dense over the vertex universe; cut() so
-    // each iteration's plan is leaf-sized (state is referenced twice per
-    // iteration — see graft.core.Iterate). Fresh starts derive r in the SAME
-    // projection over the cached degrees (r5 joined degrees with a second
-    // scan of itself — a setup join for nothing); only a checkpoint resume,
-    // whose r actually comes from parquet, pays the join.
-    val state0 = (resumed match {
-      case Some((_, r0)) => degrees.join(r0, Seq("id"))
-        .select(col("id"), col("r"), col("d"), col("isSink"))
-      case None => degrees
-        .select(col("id"), initR.as("r"), col("d"), col("isSink"))
-    }).observe("pr_init", sum(when(col("isSink"), col("r"))).as("sinkMass"))
-    var state = Iterate.cutKeyed(state0, parts, "id")
-    // the initial sink mass is OBSERVED during the state materialization
-    // pass itself (same CollectMetrics pattern as the loop) — r5 ran one
-    // extra full-state aggregation job here
-    var sinkMass = getD(Iterate.observedRow(state0, "pr_init")(
-      state.agg(sum(when(col("isSink"), col("r")))).head), 0)
+    // state = (id, r, d, isSink), dense over the vertex universe, cut keyed
+    // on id each iteration (graft.core.Iterate). Fresh starts derive r in the
+    // SAME projection over the cached degrees; only a checkpoint resume,
+    // whose r comes from parquet, pays the join. The convergence test is the
+    // inf-norm delta (normdiff.m:12-16).
+    val fp = Iterate.fixpoint(
+      degrees.select(col("id"), initR.as("r"), col("d"), col("isSink")),
+      parts, Seq("id"), maxIter,
+      metrics = Seq(max(abs(col("r") - col("rp"))).as("delta"), sinkMass),
+      initMetrics = Seq(sinkMass),
+      checkpoint = snapshots.copy(resume = r0 => degrees.join(r0, Seq("id"))
+          .select(col("id"), col("r"), col("d"), col("isSink")))) {
+      (state, _, prev) =>
+        val mass = getD(prev, "sinkMass")
+        // uniform: every vertex gets (1-d)/n + d*sinkMass/n; personalized:
+        // only seeds get (1-d)/|S| + d*sinkMass/|S|, everyone else 0
+        val base = if (seeds.isEmpty) (1.0 - damp) / n + damp * mass / n
+                   else (1.0 - damp) / nSeeds + damp * mass / nSeeds
+        val baseExpr = if (seeds.isEmpty) lit(base)
+                       else when(isSeed, lit(base)).otherwise(lit(0.0))
 
-    var iter = startIter
-    var delta = Double.PositiveInfinity
-    val metrics = scala.collection.mutable.ArrayBuffer[IterMetric]()
-
-    import spark.implicits._
-    while (iter < maxIter && delta >= tol) {
-      val t0 = System.nanoTime()
-      // uniform: every vertex gets (1-d)/n + d*sinkMass/n; personalized:
-      // only seeds get (1-d)/|S| + d*sinkMass/|S|, everyone else 0
-      val base = if (seeds.isEmpty) (1.0 - damp) / n + damp * sinkMass / n
-                 else (1.0 - damp) / nSeeds + damp * sinkMass / nSeeds
-      val baseExpr = if (seeds.isEmpty) lit(base)
-                     else when(isSeed, lit(base)).otherwise(lit(0.0))
-
-      // gather r(src)/d(src) along edges, scatter-add into dst
-      // (semiring +.2nd over the structural adjacency); hot-src edges join a
-      // broadcast of the few hot state rows so no single task owns a hub
-      val stateT = state.select(col("id").as("src"), (col("r") / col("d")).as("t"))
-      val term = if (weighted) col("t") * col("w") else col("t") // +.* vs +.2nd
-      // grouped: co-partitioned join probes one row per src, the dst array
-      // explodes inside the same stage straight into the partial hash-agg
-      val coldGrouped =
-        if (grouped) adj.join(stateT, Seq("src"))
-          .select(explode(col("dsts")).as("dst"), col("t").as("c"))
-        else adj.join(stateT, Seq("src")).select(col("dst"), term.as("c"))
-      // over-cap srcs gather as flat per-edge rows (co-partitioned join too)
-      val coldGather = adjRest match {
-        case None => coldGrouped
-        case Some(r) => coldGrouped.unionByName(
-          r.join(stateT, Seq("src")).select(col("dst"), col("t").as("c")))
-      }
-      val gathered = adjHot match {
-        case None => coldGather
-        case Some(h) => coldGather.unionByName(
-          h.join(broadcast(stateT.filter(col("src").isin(hot: _*))), Seq("src"))
-            .select(col("dst"), term.as("c")))
-      }
-      val contrib = gathered.groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
-
-      // inf-norm convergence (normdiff.m:12-16) + the NEXT iteration's sink
-      // mass are OBSERVED during the state-materialization pass itself
-      // (CollectMetrics accumulators) — no separate per-iteration stats job
-      val merged = state.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (baseExpr + lit(damp) * coalesce(col("s"), lit(0.0))).as("r"),
-          col("r").as("rp"), col("d"), col("isSink"))
-        .observe(s"pr_$iter", max(abs(col("r") - col("rp"))).as("delta"),
-          sum(when(col("isSink"), col("r"))).as("sinkMass"))
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      val row = Iterate.observedRow(merged, s"pr_$iter")(
-        next.agg(max(abs(col("r") - col("rp"))),
-          sum(when(col("isSink"), col("r")))).head)
-      delta = getD(row, 0)
-      sinkMass = getD(row, 1)
-
-      Iterate.free(state)
-      state = next
-      iter += 1
-      metrics += IterMetric(iter, delta, sinkMass, (System.nanoTime() - t0) / 1000000)
-
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "iter" -> iter.toLong,
-          "delta_e9" -> (delta * 1e9).toLong, "millis" -> metrics.last.millis)
-        if (iter % checkpointEvery == 0 || delta < tol || iter == maxIter)
-          graft.core.Checkpoint.write(state.select(col("id"), col("r")), dir, iter, tag)
-      }
-    }
+        // gather r(src)/d(src) along edges, scatter-add into dst
+        // (semiring +.2nd over the structural adjacency); hot-src edges join
+        // a broadcast of the few hot state rows so no single task owns a hub
+        val stateT = state.select(col("id").as("src"), (col("r") / col("d")).as("t"))
+        val term = if (weighted) col("t") * col("w") else col("t") // +.* vs +.2nd
+        // grouped: co-partitioned join probes one row per src, the dst array
+        // explodes inside the same stage straight into the partial hash-agg
+        val coldGrouped =
+          if (grouped) adj.join(stateT, Seq("src"))
+            .select(explode(col("dsts")).as("dst"), col("t").as("c"))
+          else adj.join(stateT, Seq("src")).select(col("dst"), term.as("c"))
+        // over-cap srcs gather as flat per-edge rows (co-partitioned join too)
+        val coldGather = adjRest match {
+          case None => coldGrouped
+          case Some(r) => coldGrouped.unionByName(
+            r.join(stateT, Seq("src")).select(col("dst"), col("t").as("c")))
+        }
+        val gathered = adjHot match {
+          case None => coldGather
+          case Some(h) => coldGather.unionByName(
+            h.join(broadcast(stateT.filter(col("src").isin(hot: _*))), Seq("src"))
+              .select(col("dst"), term.as("c")))
+        }
+        val contrib = gathered.groupBy(col("dst").as("id")).agg(sum(col("c")).as("s"))
+        state.join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (baseExpr + lit(damp) * coalesce(col("s"), lit(0.0))).as("r"),
+            col("r").as("rp"), col("d"), col("isSink"))
+    } { (_, row) => !(getD(row, "delta") >= tol) }
 
     adj.unpersist(false); adjHot.foreach(_.unpersist(false))
     adjRest.foreach(_.unpersist(false))
     degrees.unpersist(false)
-    Result(state.select(col("id"), col("r")), iter, delta, metrics.toSeq)
+    val metrics = fp.trace.map(s =>
+      IterMetric(s.iter, getD(s.row, "delta"), getD(s.row, "sinkMass"), s.millis))
+    Result(fp.state.select(col("id"), col("r")), fp.iter,
+      metrics.lastOption.fold(Double.PositiveInfinity)(_.delta), metrics)
   }
 
-  private def getD(row: Row, i: Int): Double =
-    if (row.isNullAt(i)) 0.0 else row.getDouble(i)
+  private def getD(row: Row, field: String): Double =
+    Iterate.double(row, row.fieldIndex(field))
 
   /** Fixed-iteration-count variant with no early exit — used by the unrolled
     * SQL oracle (same math, k iterations exactly).
@@ -342,31 +306,28 @@ object PageRank {
       .toDF("pid", "id", "ns")
       .join(verts, Seq("id"), "left_semi")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var state = Iterate.cut(seeds.select(col("pid"), col("id"),
-      (lit(1.0) / col("ns").cast("double")).as("r")))
-    for (_ <- 1 to k) {
-      val sinkMass = state.join(deg.filter(col("sink")), Seq("id"), "left_semi")
-        .groupBy("pid").agg(sum(col("r")).as("m"))
-      val contrib = adj
-        .join(state.select(col("id").as("src"), col("pid"), col("r"))
-          .join(deg.select(col("id").as("src"), col("d")), Seq("src")), Seq("src"))
-        .groupBy(col("pid"), col("dst"))
-        .agg(sum(col("r") / col("d")).as("c"))
-        .withColumnRenamed("dst", "id")
-      val base = seeds.join(broadcast(sinkMass), Seq("pid"), "left")
-        .select(col("pid"), col("id"),
-          (lit(1.0 - damp) / col("ns").cast("double")
-            + lit(damp) * coalesce(col("m"), lit(0.0)) / col("ns").cast("double"))
-            .as("base"))
-      val next = base.join(contrib, Seq("pid", "id"), "full_outer")
-        .select(col("pid"), col("id"),
-          (coalesce(col("base"), lit(0.0))
-            + lit(damp) * coalesce(col("c"), lit(0.0))).as("r"))
-      val cut = Iterate.cut(next)
-      Iterate.free(state)
-      state = cut
-    }
+    val fp = Iterate.fixpoint(seeds.select(col("pid"), col("id"),
+        (lit(1.0) / col("ns").cast("double")).as("r")), parts, Nil, k) {
+      (state, _, _) =>
+        val sinkMass = state.join(deg.filter(col("sink")), Seq("id"), "left_semi")
+          .groupBy("pid").agg(sum(col("r")).as("m"))
+        val contrib = adj
+          .join(state.select(col("id").as("src"), col("pid"), col("r"))
+            .join(deg.select(col("id").as("src"), col("d")), Seq("src")), Seq("src"))
+          .groupBy(col("pid"), col("dst"))
+          .agg(sum(col("r") / col("d")).as("c"))
+          .withColumnRenamed("dst", "id")
+        val base = seeds.join(broadcast(sinkMass), Seq("pid"), "left")
+          .select(col("pid"), col("id"),
+            (lit(1.0 - damp) / col("ns").cast("double")
+              + lit(damp) * coalesce(col("m"), lit(0.0)) / col("ns").cast("double"))
+              .as("base"))
+        base.join(contrib, Seq("pid", "id"), "full_outer")
+          .select(col("pid"), col("id"),
+            (coalesce(col("base"), lit(0.0))
+              + lit(damp) * coalesce(col("c"), lit(0.0))).as("r"))
+    } { (_, _) => false }
     adj.unpersist(false); deg.unpersist(false); seeds.unpersist(false)
-    state
+    fp.state
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Iterate
 
 /** Deterministic random walks — the sampling primitive of web-graph
   * embedding pipelines (DeepWalk/node2vec-style corpus generation), built
@@ -34,8 +35,7 @@ object RandomWalk {
   def run(spark: SparkSession, edges: DataFrame, starts: DataFrame,
           steps: Int, numPartitions: Int = 0): DataFrame = {
     require(steps >= 1, "need at least one step")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))

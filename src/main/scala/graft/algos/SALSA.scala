@@ -40,8 +40,7 @@ object SALSA {
   private def loop(spark: SparkSession, edges: DataFrame, k: Int,
                    numPartitions: Int): DataFrame = {
     require(k >= 1, "SALSA needs k >= 1 iterations")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val e = edges.select(col("src"), col("dst")).distinct()
     val outd = e.groupBy("src").agg(count(lit(1)).as("od"))

@@ -57,8 +57,7 @@ object SCC {
 
   private def runLoop(spark: SparkSession, edges: DataFrame, maxOuter: Int,
                       numPartitions: Int, maxTrim: Int): (DataFrame, Int) = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -215,8 +214,7 @@ object SCC {
     */
   def condense(spark: SparkSession, edges: DataFrame,
                numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val scc = run(spark, edges, numPartitions = parts)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val dag = dagEdges(scc, edges).persist(StorageLevel.MEMORY_AND_DISK)
@@ -236,8 +234,7 @@ object SCC {
     */
   def condenseEdges(spark: SparkSession, edges: DataFrame,
                     numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val scc = run(spark, edges, numPartitions = parts)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val out = dagEdges(scc, edges).cache()

@@ -25,8 +25,7 @@ object SSSP {
           numPartitions: Int = 0, checkpointDir: Option[String] = None,
           checkpointEvery: Int = 10): DataFrame = {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src"), col("dst"), col("w"))
       .repartition(parts, col("src"))

@@ -35,8 +35,7 @@ object SimRank {
                c: Double = 0.8125, minScore: Double = 0.0,
                numPartitions: Int = 0): DataFrame = {
     require(k >= 0)
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val e = Iterate.cut(edges.select(col("src"), col("dst")).distinct()
       .repartition(parts, col("src")))
     val verts = Iterate.cut(

@@ -34,8 +34,7 @@ object TemporalReach {
     */
   def run(spark: SparkSession, edges: DataFrame, source: Long,
           maxIter: Int = 10000, numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("ts").cast("long").as("ts"))

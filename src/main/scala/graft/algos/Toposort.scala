@@ -32,8 +32,7 @@ object Toposort {
   /** (id, layer, ord) for every vertex of the DAG. */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 10000,
           numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))

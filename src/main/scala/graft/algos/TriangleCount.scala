@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Iterate
 
 /** Triangle counting with the reference's SandiaDot2 semantics
   * (GraphBLAS/@GrB/tricount.m:80-102): on the symmetric, zero-diagonal
@@ -26,8 +27,7 @@ object TriangleCount {
   /** Total triangle count. */
   def run(spark: SparkSession, edges: DataFrame, degreeOrder: Boolean = false,
           numPartitions: Int = 0): Long = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     // simple undirected graph: canonical (lo,hi), no self-loops, distinct
     val base = edges.select(
@@ -69,9 +69,12 @@ object TriangleCount {
   private[graft] def closedWedges(spark: SparkSession, canon: DataFrame,
                                   parts: Int): DataFrame = {
     // one setup pass: edge count (materializes the persisted canon) + id
-    // bounds for the packed-key fast path below
+    // bounds for the packed-key fast path below. Ids are read and packed as
+    // longs: an int shiftleft takes its shift amount mod 32, which would
+    // silently collapse the packed key (a no-op cast on long ids)
     val stats = canon.agg(count(lit(1)).as("m"),
-      min(col("lo")).as("mn"), max(col("hi")).as("mx")).collect()(0)
+      min(col("lo").cast("long")).as("mn"), max(col("hi").cast("long")).as("mx"))
+      .collect()(0)
     val edgeCount = stats.getLong(0)
     val packable = edgeCount > 0 && !stats.isNullAt(1) &&
       stats.getLong(1) >= 0 && stats.getLong(2) < (1L << 31)
@@ -97,9 +100,9 @@ object TriangleCount {
       // becomes a LongHashedRelation, whose primitive-key probe is ~15x
       // cheaper than the 2-long UnsafeRow-key probe (measured on the sf0.1
       // K1000 graph: 1.66e8 probes in 1.5-2.7 s packed vs 22-23 s struct)
-      wedges.select((shiftleft(col("a"), 32) + col("c")).as("ac"))
+      wedges.select((shiftleft(col("a").cast("long"), 32) + col("c")).as("ac"))
         .join(broadcast(
-          canon.select((shiftleft(col("lo"), 32) + col("hi")).as("ac"))),
+          canon.select((shiftleft(col("lo").cast("long"), 32) + col("hi")).as("ac"))),
           Seq("ac"), "left_semi")
     else if (edgeCount <= bcastMax)
       wedges.join(broadcast(mask), Seq("a", "c"), "left_semi")
@@ -127,8 +130,7 @@ object TriangleCount {
   def estimate(spark: SparkSession, edges: DataFrame, invP: Long,
                numPartitions: Int = 0): DataFrame = {
     require(invP >= 1, "invP must be >= 1")
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
     val M = 1000003L
     val coin = (((col("lo") % M) * 48271L + 11L) % M
       * (((col("hi") % M) * 7919L + 7L) % M)) % M % invP
@@ -156,7 +158,8 @@ object TriangleCount {
   def edgeSupport(canon: DataFrame): DataFrame = {
     val spark = canon.sparkSession
     val stats = canon.agg(count(lit(1)).as("m"),
-      min(col("lo")).as("mn"), max(col("hi")).as("mx")).collect()(0)
+      min(col("lo").cast("long")).as("mn"), max(col("hi").cast("long")).as("mx"))
+      .collect()(0)
     val m = stats.getLong(0)
     val packable = m > 0 && !stats.isNullAt(1) &&
       stats.getLong(1) >= 0 && stats.getLong(2) < (1L << 31)
@@ -167,9 +170,9 @@ object TriangleCount {
     val wedges = e1.join(e2, Seq("b"))
     val tri =
       if (m <= bcastMax && packable)
-        wedges.withColumn("ac", shiftleft(col("a"), 32) + col("c"))
+        wedges.withColumn("ac", shiftleft(col("a").cast("long"), 32) + col("c"))
           .join(broadcast(
-            canon.select((shiftleft(col("lo"), 32) + col("hi")).as("ac"))),
+            canon.select((shiftleft(col("lo").cast("long"), 32) + col("hi")).as("ac"))),
             Seq("ac"), "left_semi")
           .select(col("a"), col("b"), col("c"))
       else if (m <= bcastMax)

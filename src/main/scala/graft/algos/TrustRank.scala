@@ -37,8 +37,7 @@ object TrustRank {
   private def runImpl(spark: SparkSession, edges: DataFrame, k: Int,
                       trusted: Column, damp: Double,
                       numPartitions: Int): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src"), col("dst")).distinct()
       .repartition(parts, col("src"))
@@ -56,37 +55,23 @@ object TrustRank {
     require(nSeeds > 0, "TrustRank needs a non-empty trusted seed set")
 
     // start from the trust distribution itself (TrustRank §4.3: t0 = d/|S|)
-    var state = Iterate.cutKeyed(degrees.select(col("id"),
-      when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("r"),
-      col("d"), col("isSink"), col("isSeed")), parts, "id")
-    var sinkMass = {
-      val r = state.agg(sum(when(col("isSink"), col("r")))).collect()(0)
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-
-    var iter = 0
-    while (iter < k) {
-      val base = (1.0 - damp) / nSeeds + damp * sinkMass / nSeeds
-      val stateT = state.select(col("id").as("src"),
-        (col("r") / col("d")).as("t"))
-      val contrib = adj.join(stateT, Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("t")).as("s"))
-      val merged = state.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (when(col("isSeed"), lit(base)).otherwise(lit(0.0)) +
-            lit(damp) * coalesce(col("s"), lit(0.0))).as("r"),
-          col("d"), col("isSink"), col("isSeed"))
-        .observe(s"tr_$iter", sum(when(col("isSink"), col("r"))).as("sinkMass"))
-      val next = Iterate.cutKeyed(merged, parts, "id")
-      sinkMass = {
-        val row = Iterate.observedRow(merged, s"tr_$iter")(
-          next.agg(sum(when(col("isSink"), col("r")))).head)
-        if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      }
-      Iterate.free(state)
-      state = next
-      iter += 1
-    }
+    val sinkMass = sum(when(col("isSink"), col("r"))).as("sinkMass")
+    val state = Iterate.fixpoint(degrees.select(col("id"),
+        when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("r"),
+        col("d"), col("isSink"), col("isSeed")),
+      parts, Seq("id"), k, metrics = Seq(sinkMass), initMetrics = Seq(sinkMass)) {
+      (state, _, prev) =>
+        val base = (1.0 - damp) / nSeeds + damp * Iterate.double(prev, 0) / nSeeds
+        val stateT = state.select(col("id").as("src"),
+          (col("r") / col("d")).as("t"))
+        val contrib = adj.join(stateT, Seq("src"))
+          .groupBy(col("dst").as("id")).agg(sum(col("t")).as("s"))
+        state.join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (when(col("isSeed"), lit(base)).otherwise(lit(0.0)) +
+              lit(damp) * coalesce(col("s"), lit(0.0))).as("r"),
+            col("d"), col("isSink"), col("isSeed"))
+    } { (_, _) => false }.state
     adj.unpersist(false); degrees.unpersist(false)
     state.select(col("id"), col("r"))
   }

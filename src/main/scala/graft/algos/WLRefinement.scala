@@ -60,8 +60,7 @@ object WLRefinement {
 
   private def runImpl(spark: SparkSession, edges: DataFrame, maxRounds: Int,
                       numPartitions: Int, earlyExit: Boolean): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val canon = edges.select(
         least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))

@@ -33,8 +33,7 @@ object WidestPath {
     */
   def run(spark: SparkSession, edges: DataFrame, source: Long,
           maxIter: Int = 10000, numPartitions: Int = 0): DataFrame = {
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = Iterate.partitions(spark, numPartitions)
 
     val adj = edges.select(col("src"), col("dst"), col("w"))
       .repartition(parts, col("src"))

@@ -224,8 +224,7 @@ object Corpus {
                    maxDepth: Int = 20, numPartitions: Int = 0): DataFrame =
     graft.core.Iterate.withoutAQE(spark) {
       import graft.core.Iterate
-      val parts = if (numPartitions > 0) numPartitions
-                  else spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val parts = Iterate.partitions(spark, numPartitions)
       val names = corpus.select(col("repo"), col("path"),
         vertexId(col("repo"), col("path")).as("id"))
       // taint flows dst -> src: key the reversed adjacency by the TAINTED end

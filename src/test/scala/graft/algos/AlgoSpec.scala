@@ -1,5 +1,6 @@
 package graft.algos
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ref.DenseMimic
@@ -89,8 +90,14 @@ class AlgoSpec extends SparkTestBase {
       val want = DenseMimic.triangles(es)
       assert(TriangleCount.run(spark, edgesDF(es)) == want, "tricount")
       assert(TriangleCount.run(spark, edgesDF(es), degreeOrder = true) == want, "tricount ordered")
+      // IntegerType ids: the packed (a << 32) + c key must be built in long
+      assert(TriangleCount.run(spark, intIds(edgesDF(es))) == want, "tricount int ids")
     }
   }
+
+  /** The same edges with IntegerType src/dst columns. */
+  def intIds(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("int").as("src"), col("dst").cast("int").as("dst"), col("w"))
 
   test("edgeSupport: every K4 edge closes 2 triangles") {
     import spark.implicits._
@@ -99,6 +106,18 @@ class AlgoSpec extends SparkTestBase {
     val sup = TriangleCount.edgeSupport(canon).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(sup.size == 6 && sup.values.forall(_ == 2L))
+    // IntegerType ids, also on a sparse graph, where a collapsed packed key
+    // would close wedges that are not triangles
+    val sparse = randGraph(30, 120, 15L).toSeq
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct.toDF("lo", "hi")
+    for (c <- Seq(canon, sparse)) {
+      val want = TriangleCount.edgeSupport(c).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val got = TriangleCount.edgeSupport(
+          c.selectExpr("CAST(lo AS INT) AS lo", "CAST(hi AS INT) AS hi")).collect()
+        .map(r => (r.getInt(0).toLong, r.getInt(1).toLong) -> r.getLong(2)).toMap
+      assert(got == want, "edgeSupport int ids")
+    }
   }
 
   test("k-truss: 3-truss of K4 + pendant edge = K4 alone; 5-truss empty") {
@@ -109,6 +128,13 @@ class AlgoSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(t3 == k4)
     assert(KTruss.run(spark, edgesDF(es), k = 5).count() == 0L)
+    for (g <- Seq(es, randGraph(30, 200, 15L))) {
+      val want = KTruss.run(spark, edgesDF(g), k = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = KTruss.run(spark, intIds(edgesDF(g)), k = 3)
+        .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSet
+      assert(got == want, "k-truss int ids")
+    }
   }
 
   // --- BFS / SSSP ------------------------------------------------------------
