@@ -13,20 +13,25 @@ import graft.core.Iterate
   * vertices. Parent variant uses any.first with q(i)=i ids (bfs.m:149-167);
   * ANY made deterministic as MIN parent.
   *
-  * Spark shape: frontier is a (usually small) Dataset — Catalyst/AQE
-  * broadcasts it against the partitioned adjacency (the reference's "push"
-  * direction); the complemented mask is a left-anti join against the visited
-  * set.
+  * Spark shape: the (min, +1) [[Relax]]ation over (level, parent) — the
+  * frontier is the vertices first reached last level, a vertex is only ever
+  * reached at its BFS level, and min over (level, src) picks the min parent
+  * one level up. One co-partitioned gather and one keyed cut per level.
   */
 object BFS {
 
   /** Returns (id, level, parent) for reachable vertices; source has level 0,
     * parent = itself.
+    *
+    * With `checkpointDir`, snapshots land every `checkpointEvery` levels and
+    * a rerun resumes from the newest one with ALL visited vertices as the
+    * frontier — it re-derives only the true frontier on the resume level.
     */
   def run(spark: SparkSession, edges: DataFrame, source: Long, maxIter: Int = 10000,
           numPartitions: Int = 0, checkpointDir: Option[String] = None,
           checkpointEvery: Int = 10): DataFrame = {
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+    val snapshots = Iterate.Snapshots(checkpointDir, checkpointEvery, Nil, s"src=$source",
+      row => Seq("frontier" -> Iterate.long(row, 0)))
     val parts = Iterate.partitions(spark, numPartitions)
 
     // repartition(src) BEFORE the distinct: hash(src) satisfies the dedup
@@ -37,50 +42,11 @@ object BFS {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // visited is referenced twice per level (anti-join + union): cut() per
-    // level keeps plans leaf-sized (graft.core.Iterate). With checkpointDir,
-    // a rerun resumes from the newest snapshot with ALL visited vertices as
-    // the frontier — the anti-join drops already-visited neighbors, so the
-    // over-wide frontier only re-derives the true one on the resume round.
-    val resumed = checkpointDir
-      .flatMap(graft.core.Checkpoint.newest(spark, _, Seq("id", "level", "parent"), s"src=$source"))
-    var visited = Iterate.cut(resumed.map(_._2).getOrElse(
-      spark.range(1).select(lit(source).as("id"),
-        lit(0).as("level"), lit(source).as("parent"))))
-    var frontier = visited.select(col("id"))
-    var level = resumed.map(_._1).getOrElse(0)
-    var frontierSize = 1L
-
-    while (frontierSize > 0 && level < maxIter) {
-      val t0 = System.nanoTime()
-      level += 1
-      // q<~v,replace> = q * A  (any.first for parents, min-deterministic);
-      // the frontier size is observed during the cut pass itself (no extra job)
-      val nextPre = adj.join(frontier.select(col("id").as("src")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), lit(level).as("level"), col("parent"))
-        .observe(s"bfs_$level", count(lit(1)).as("n"))
-      val next = Iterate.cut(nextPre)
-      frontierSize = Iterate.observedLong(nextPre, s"bfs_$level")(next.count())
-      if (frontierSize > 0) {
-        val newVisited = Iterate.cut(visited.unionByName(next))
-        Iterate.free(visited)
-        visited = newVisited
-        frontier = next.select("id")
-      }
-      // next stays cached as the frontier for one more level; the superseded
-      // frontier blocks are freed by the ContextCleaner (tiny)
-      checkpointDir.foreach { dir =>
-        graft.core.Checkpoint.logMetric(spark, dir, "level" -> level.toLong,
-          "frontier" -> frontierSize, "millis" -> (System.nanoTime() - t0) / 1000000)
-        if (level % checkpointEvery == 0 || frontierSize == 0 || level == maxIter)
-          graft.core.Checkpoint.write(
-            visited.select(col("id"), col("level"), col("parent")), dir, level,
-            s"src=$source")
-      }
-    }
+    val fp = Relax(adj, spark.range(1).select(lit(source).as("id"),
+        lit(0).as("level"), lit(source).as("parent")), parts, maxIter,
+        checkpoint = snapshots)(
+      struct((col("level") + 1).as("level"), col("src").cast("long").as("parent")))
     adj.unpersist(false)
-    visited
+    fp.state.select(col("id"), col("level"), col("parent"))
   }
 }

@@ -26,9 +26,9 @@ import graft.core.Iterate
   *
   * Spark shape: one SCC run, then five multi-source reachability fixpoints
   * (forward/backward from CORE, undirected from CORE, forward from IN,
-  * backward from OUT). Each fixpoint round is a frontier semi-join + distinct
-  * + anti-join over the id hash-partitioning — the BFS shapes, with
-  * `Iterate.cutKeyed` leaf states so plans stay constant-size. Rounds are
+  * backward from OUT). Each is the (min, +0) [[Relax]]ation from a seed
+  * set: one co-partitioned frontier join + dst aggregate and one keyed cut
+  * per round, so plans stay constant-size. Rounds are
   * bounded by the relevant eccentricity; at web scale each round is a
   * co-partitioned equi-join, never a cartesian. The only driver-side value
   * is the single (label, count) row picking the giant SCC.
@@ -67,9 +67,9 @@ object Bowtie {
 
     val fwdCore = reach(e0, core, parts, "bt_fwd")    // CORE ⇝ v (incl. CORE)
     val bwdCore = reach(rev, core, parts, "bt_bwd")   // v ⇝ CORE (incl. CORE)
-    val inSet = bwdCore.join(core, Seq("id"), "left_anti")
+    val inSet = bwdCore.select(col("id")).join(core, Seq("id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val outSet = fwdCore.join(core, Seq("id"), "left_anti")
+    val outSet = fwdCore.select(col("id")).join(core, Seq("id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val weak = reach(und, core, parts, "bt_weak")     // CORE's weak component
     val fromIn = reach(e0, inSet, parts, "bt_fin")    // IN ⇝ v (incl. IN)
@@ -97,36 +97,15 @@ object Bowtie {
   }
 
   /** Multi-source reachability closure: all vertices reachable from
-    * `sources` along `edges` (sources included). Frontier fixpoint — each
-    * round expands only the newly-reached frontier (semi-join on src),
-    * dedups, and anti-joins the seen set; rounds = max distance from the
-    * source set. Returns a cutKeyed (id) table the caller must Iterate.free.
+    * `sources` along `edges` (sources included), as (id, …) — the cut
+    * relaxation state, which the caller must Iterate.free. Rounds = max
+    * distance from the source set.
     */
-  private def reach(edges: DataFrame, sources: DataFrame, parts: Int,
-                    tag: String): DataFrame = {
-    var seen = Iterate.cutKeyed(sources.select(col("id")), parts, "id")
-    var frontier = seen
-    var n = frontier.count()
-    var round = 0
-    while (n > 0) {
-      round += 1
-      val grown = edges
-        .join(frontier.select(col("id").as("src")), Seq("src"), "left_semi")
-        .select(col("dst").as("id")).distinct()
-        .join(seen, Seq("id"), "left_anti")
-      val next = Iterate.cutKeyed(grown, parts, "id")
-      n = next.count()
-      if (n > 0) {
-        val s2 = Iterate.cutKeyed(seen.unionByName(next), parts, "id")
-        if (frontier ne seen) Iterate.free(frontier)
-        Iterate.free(seen)
-        seen = s2; frontier = next
-      } else {
-        Iterate.free(next)
-        if (frontier ne seen) Iterate.free(frontier)
-      }
-      require(round <= 100000, s"$tag: reachability did not close")
-    }
-    seen
+  private[algos] def reach(edges: DataFrame, sources: DataFrame, parts: Int,
+                           tag: String): DataFrame = {
+    val fp = Relax(edges, sources.select(col("id"), lit(0).as("hop")), parts,
+      maxIter = 100000)(col("hop"))
+    require(Relax.settled(fp), s"$tag: reachability did not close")
+    fp.state
   }
 }

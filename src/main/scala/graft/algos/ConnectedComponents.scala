@@ -125,8 +125,9 @@ object ConnectedComponents {
     val hot = if (skewSalts > 0) graft.core.Skew.hotKeys(undPlain, "src", parts)
               else Seq.empty[Any]
     val (und, undHot) = if (hot.isEmpty) (undPlain, None) else {
+      // a filter keeps undPlain's hash(src) layout: no second exchange
       val cold = undPlain.filter(!col("src").isin(hot: _*))
-        .repartition(parts, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       val hotE = undPlain.filter(col("src").isin(hot: _*))
         .repartition(parts, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
       cold.count(); hotE.count()

@@ -21,7 +21,7 @@ import graft.core.Iterate
   * over +.* against the row- resp. column-scaled adjacency
   * (`Source/GB_mxm.c`, rowscale/colscale as in GBMatrix.rowscale).
   *
-  * Spark shape: identical to [[HITS]] — the adjacency is cached twice (by
+  * Spark shape ([[HITS]] runs this loop with unit weights): the adjacency is cached twice (by
   * src and by dst) with the 1/outdeg and 1/indeg edge weights attached
   * ONCE at build time (a per-vertex-sized degree join, never repeated in
   * the loop); each half-step is one co-partitioned gather join + one hash
@@ -34,20 +34,25 @@ object SALSA {
     * of the edge-derived universe (0.0 where no out/in edges).
     */
   def runFixed(spark: SparkSession, edges: DataFrame, k: Int,
-               numPartitions: Int = 0): DataFrame =
-    Iterate.withoutAQE(spark)(loop(spark, edges, k, numPartitions))
-
-  private def loop(spark: SparkSession, edges: DataFrame, k: Int,
-                   numPartitions: Int): DataFrame = {
+               numPartitions: Int = 0): DataFrame = {
     require(k >= 1, "SALSA needs k >= 1 iterations")
-    val parts = Iterate.partitions(spark, numPartitions)
-
     val e = edges.select(col("src"), col("dst")).distinct()
     val outd = e.groupBy("src").agg(count(lit(1)).as("od"))
     val ind = e.groupBy("dst").agg(count(lit(1)).as("idg"))
     val ew = e.join(outd, Seq("src")).join(ind, Seq("dst"))
       .select(col("src"), col("dst"),
         (lit(1.0) / col("od")).as("wo"), (lit(1.0) / col("idg")).as("wi"))
+    Iterate.withoutAQE(spark)(loop(spark, ew, k, numPartitions))
+  }
+
+  /** The alternating walk over distinct edges `ew` (src, dst, wo, wi): the
+    * auth half-step pushes h·wo along src→dst, the hub half-step a·wi back.
+    * [[HITS]] is this loop with unit weights.
+    */
+  private[algos] def loop(spark: SparkSession, ew: DataFrame, k: Int,
+                          numPartitions: Int): DataFrame = {
+    val parts = Iterate.partitions(spark, numPartitions)
+
     val bySrc = ew.repartition(parts, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
     val byDst = ew.repartition(parts, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
 

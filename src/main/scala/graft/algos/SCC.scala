@@ -217,9 +217,13 @@ object SCC {
     val parts = Iterate.partitions(spark, numPartitions)
     val scc = run(spark, edges, numPartitions = parts)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dag = dagEdges(scc, edges).persist(StorageLevel.MEMORY_AND_DISK)
-    dag.count()
-    val lvls = Iterate.withoutAQE(spark)(topoLevels(spark, dag, parts))
+    val dag = dagEdges(scc, edges)
+      .select(col("scc_src").as("src"), col("scc_dst").as("dst"))
+      .repartition(parts, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the [[Toposort]] layering; a DAG by construction, so the bound is slack
+    val lvls = Toposort.layers(dag, parts, maxIter = 100000)
+      .select(col("id").as("scc"), col("layer").as("level"))
     // components touched by no inter-component edge are sources at level 0
     val out = scc.select(col("scc")).distinct()
       .join(lvls, Seq("scc"), "left")
@@ -249,38 +253,4 @@ object SCC {
       .join(scc.select(col("id").as("dst"), col("scc").as("scc_dst")), Seq("dst"))
       .select(col("scc_src"), col("scc_dst"))
       .filter(col("scc_src") =!= col("scc_dst")).distinct()
-
-  /** Longest-path-from-source levels over a DAG (max-plus fixpoint; rounds
-    * = depth). Also returns isolated components at level 0 when the caller
-    * unions them in. (scc, level).
-    */
-  private def topoLevels(spark: SparkSession, dag: DataFrame,
-                         parts: Int): DataFrame = {
-    val verts = dag.select(col("scc_src").as("scc"))
-      .unionByName(dag.select(col("scc_dst").as("scc"))).distinct()
-    var lvl = Iterate.cutKeyed(verts.select(col("scc"), lit(0L).as("level")),
-      parts, "scc")
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      round += 1
-      val push = dag
-        .join(lvl.select(col("scc").as("scc_src"), col("level").as("ls")),
-          Seq("scc_src"))
-        .groupBy(col("scc_dst").as("scc"))
-        .agg((max(col("ls")) + 1L).as("cand"))
-      val merged = lvl.join(push, Seq("scc"), "left")
-        .select(col("scc"),
-          greatest(col("level"), coalesce(col("cand"), col("level"))).as("level"),
-          (coalesce(col("cand"), lit(-1L)) > col("level")).as("chg"))
-        .observe(s"topo_$round", sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-      val next = Iterate.cutKeyed(merged, parts, "scc")
-      changed = Iterate.observedLong(merged, s"topo_$round")(
-        next.filter(col("chg")).count())
-      Iterate.free(lvl)
-      lvl = next
-      require(round <= 100000, "not a DAG?")
-    }
-    lvl.select(col("scc"), col("level"))
-  }
 }

@@ -22,8 +22,9 @@ import graft.core.Iterate
   * number of distinct timestamps — at web scale that's the crawl-epoch
   * count, a small constant, not graph diameter.
   *
-  * Spark shape: adjacency hash-partitioned by src once; each round joins
-  * only vertices whose arrival improved, one max-free min-aggregate by dst.
+  * Spark shape: the (min, ts) [[Relax]]ation with the edge gate
+  * ts > arrival(src) — adjacency hash-partitioned by src once; each round
+  * joins only vertices whose arrival improved, one min-aggregate by dst.
   * The source is seeded at arrival −1 ("present at start"; every real
   * timestamp ≥ 0 qualifies) and is emitted with that sentinel.
   */
@@ -41,33 +42,9 @@ object TemporalReach {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var arr = Iterate.cut(spark.range(1)
-      .select(lit(source).as("id"), lit(-1L).as("arr")))
-    var frontier = arr
-    var active = 1L
-    var iter = 0
-
-    while (active > 0 && iter < maxIter) {
-      iter += 1
-      val cand = adj.join(frontier.select(col("id").as("src"), col("arr")), Seq("src"))
-        .filter(col("ts") > col("arr"))
-        .groupBy(col("dst").as("id")).agg(min(col("ts")).as("na"))
-      val improvedPre = cand.join(arr, Seq("id"), "left")
-        .filter(col("arr").isNull || col("na") < col("arr"))
-        .select(col("id"), col("na").as("arr"))
-        .observe(s"treach_$iter", count(lit(1)).as("n"))
-      val improved = Iterate.cut(improvedPre)
-      active = Iterate.observedLong(improvedPre, s"treach_$iter")(improved.count())
-      if (active > 0) {
-        val next = Iterate.cut(arr.join(improved.select("id"), Seq("id"), "left_anti")
-          .unionByName(improved))
-        Iterate.free(arr)
-        if (frontier ne arr) Iterate.free(frontier)
-        arr = next
-        frontier = improved
-      } else Iterate.free(improved)
-    }
+    val fp = Relax(adj, spark.range(1).select(lit(source).as("id"), lit(-1L).as("arr")),
+      parts, maxIter, gate = col("ts") > col("arr"))(col("ts"))
     adj.unpersist(false)
-    arr.select(col("id"), col("arr").as("arrival"))
+    fp.state.select(col("id"), col("arr").as("arrival"))
   }
 }

@@ -13,7 +13,8 @@ import graft.core.Iterate
   * schedule and `ord` is a concrete deterministic linearization. The
   * reference frames the same computation as repeated masked mxv over the
   * (max,+) semiring (`Source/GB_mxm.c` products with the GrB_MAX_PLUS
-  * monoid); here each round is one frontier join + max-aggregate.
+  * monoid); here it is the (max, +1) [[Relax]]ation seeded with every
+  * vertex at layer 0, each round one frontier join + max-aggregate.
   *
   * Delta-frontier relaxation: only vertices whose layer IMPROVED feed the
   * next round, so late rounds touch a shrinking edge subset and the round
@@ -40,34 +41,7 @@ object Toposort {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val verts = adj.select(col("src").as("id"))
-      .unionByName(adj.select(col("dst").as("id"))).distinct()
-    var layer = Iterate.cut(verts.select(col("id"), lit(0L).as("layer")))
-    var frontier = layer
-    var active = 1L
-    var iter = 0
-
-    while (active > 0) {
-      iter += 1
-      require(iter <= maxIter, s"Toposort: no fixpoint after $maxIter rounds — cycle in input?")
-      val cand = adj.join(frontier.select(col("id").as("src"), col("layer")), Seq("src"))
-        .select(col("dst").as("id"), (col("layer") + 1L).as("nl"))
-        .groupBy("id").agg(max(col("nl")).as("nl"))
-      val improvedPre = cand.join(layer, Seq("id"))
-        .filter(col("nl") > col("layer"))
-        .select(col("id"), col("nl").as("layer"))
-        .observe(s"topo_$iter", count(lit(1)).as("n"))
-      val improved = Iterate.cut(improvedPre)
-      active = Iterate.observedLong(improvedPre, s"topo_$iter")(improved.count())
-      if (active > 0) {
-        val next = Iterate.cut(layer.join(improved.select("id"), Seq("id"), "left_anti")
-          .unionByName(improved))
-        Iterate.free(layer)
-        if (frontier ne layer) Iterate.free(frontier)
-        layer = next
-        frontier = improved
-      } else Iterate.free(improved)
-    }
+    val layer = layers(adj, parts, maxIter)
     adj.unpersist(false)
     // total order: rank by (layer, id). A single global sort — fine for the
     // condensed-DAG scope; at raw-graph scale emit `layer` alone and let the
@@ -75,5 +49,18 @@ object Toposort {
     layer.withColumn("ord",
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("layer"), col("id"))).cast("long"))
+  }
+
+  /** (id, layer) over the src-partitioned DAG adjacency `adj` (src, dst):
+    * every vertex starts at layer 0 and takes 1 + the max layer of its
+    * predecessors. Raises when `maxIter` rounds do not reach the fixpoint.
+    */
+  private[algos] def layers(adj: DataFrame, parts: Int, maxIter: Int): DataFrame = {
+    val verts = adj.select(col("src").as("id"))
+      .unionByName(adj.select(col("dst").as("id"))).distinct()
+    val fp = Relax(adj, verts.select(col("id"), lit(0L).as("layer")), parts, maxIter,
+      maximize = true)(col("layer") + 1L)
+    require(Relax.settled(fp), s"Toposort: no fixpoint after $maxIter rounds — cycle in input?")
+    fp.state.select(col("id"), col("layer"))
   }
 }

@@ -18,10 +18,11 @@ import graft.core.Iterate
   * cycle back into the source can only lower it (min against real weights),
   * and LEAST(1e18, w) = w for every real edge weight.
   *
-  * Spark shape: adjacency hash-partitioned by src once; each round joins
-  * only the changed frontier, aggregates max(min(width, w)) by dst, and
-  * keeps strict improvements — late rounds touch a shrinking edge subset,
-  * and the round count is bounded by the longest useful path.
+  * Spark shape: the (max, min w) [[Relax]]ation — adjacency hash-partitioned
+  * by src once; each round joins only the changed frontier, aggregates
+  * max(min(width, w)) by dst, and keeps strict improvements — late rounds
+  * touch a shrinking edge subset, and the round count is bounded by the
+  * longest useful path.
   */
 object WidestPath {
 
@@ -39,33 +40,9 @@ object WidestPath {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var width = Iterate.cut(spark.range(1)
-      .select(lit(source).as("id"), lit(Unbounded).as("wd")))
-    var frontier = width
-    var active = 1L
-    var iter = 0
-
-    while (active > 0 && iter < maxIter) {
-      iter += 1
-      val cand = adj.join(frontier.select(col("id").as("src"), col("wd")), Seq("src"))
-        .select(col("dst").as("id"), least(col("wd"), col("w")).as("nw"))
-        .groupBy("id").agg(max(col("nw")).as("nw"))
-      val improvedPre = cand.join(width, Seq("id"), "left")
-        .filter(col("wd").isNull || col("nw") > col("wd"))
-        .select(col("id"), col("nw").as("wd"))
-        .observe(s"widest_$iter", count(lit(1)).as("n"))
-      val improved = Iterate.cut(improvedPre)
-      active = Iterate.observedLong(improvedPre, s"widest_$iter")(improved.count())
-      if (active > 0) {
-        val next = Iterate.cut(width.join(improved.select("id"), Seq("id"), "left_anti")
-          .unionByName(improved))
-        Iterate.free(width)
-        if (frontier ne width) Iterate.free(frontier)
-        width = next
-        frontier = improved
-      } else Iterate.free(improved)
-    }
+    val fp = Relax(adj, spark.range(1).select(lit(source).as("id"), lit(Unbounded).as("wd")),
+      parts, maxIter, maximize = true)(least(col("wd"), col("w")))
     adj.unpersist(false)
-    width.select(col("id"), col("wd").as("width"))
+    fp.state.select(col("id"), col("wd").as("width"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hub-vertex skew handling for the gather join of iterative algorithms
@@ -12,21 +12,15 @@ import org.apache.spark.sql.functions._
   * power-law hub src owning p% of the edges puts p% of the join + multiply +
   * partial-agg work in ONE task.
   *
-  * Two remedies, both provided:
-  *
-  * 1. **Hot-key isolation** (used by PageRank/CC): split the (few, detected)
-  *    hot-src edges out and salt-spread them across partitions by `dst`; the
-  *    cold edges keep their src partitioning (co-partitioned with the state,
-  *    zero exchange), while the hot edges join against a BROADCAST of the
-  *    ≤cap hot state rows — replicating the tiny state side to every
-  *    partition instead of funneling the huge edge side through one task.
-  *    No extra data-sized exchange anywhere; identical results.
-  *
-  * 2. **Key salting** (`saltEdges`/`saltState`, used by vxmSalted-style
-  *    one-shot products): append `salt = dst mod S` to hot keys and
-  *    replicate the matching state rows S times; join on (src, salt).
-  *    Simpler, but re-keys the state join — right for single products,
-  *    wasteful inside loops whose state partitioning is otherwise reused.
+  * The remedy is hot-key isolation (PageRank, CC): split the (few,
+  * detected) hot-src edges out and spread them across partitions by `dst`;
+  * the cold edges keep their src partitioning (co-partitioned with the
+  * state, zero exchange), while the hot edges join against a BROADCAST of
+  * the ≤cap hot state rows — replicating the tiny state side to every
+  * partition instead of funneling the huge edge side through one task. No
+  * extra data-sized exchange anywhere; identical results. This object holds
+  * the one detection policy; the split itself lives in each caller's setup.
+  * (One-shot products salt their reduce side instead: GBMatrix.vxmSalted.)
   */
 object Skew {
 
@@ -55,22 +49,4 @@ object Skew {
       .orderBy(col(countCol).desc).limit(cap)
       .select(col(key)).collect().map(_.get(0)).toSeq
   }
-
-  /** Edge side: add the salt column (hot srcs spread by dst, cold stay 0).
-    * Salting by xxhash64(dst) keeps the helper key-type-generic (string
-    * vertices included) with the same even spread as dst mod S.
-    */
-  def saltEdges(adj: DataFrame, hot: Seq[Any], salts: Int): DataFrame =
-    adj.withColumn("salt",
-      when(col("src").isin(hot: _*), pmod(xxhash64(col("dst")), lit(salts.toLong)).cast("int"))
-        .otherwise(lit(0)))
-
-  /** State side: replicate hot rows across all salt buckets (a few × S rows),
-    * cold rows get the single salt 0. `idCol` is the state's key column.
-    */
-  def saltState(state: DataFrame, idCol: String, hot: Seq[Any], salts: Int): DataFrame =
-    state.withColumn("salt", explode(
-      when(col(idCol).isin(hot: _*),
-        sequence(lit(0), lit(salts - 1)))
-        .otherwise(array(lit(0)))))
 }

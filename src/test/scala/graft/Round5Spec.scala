@@ -115,12 +115,6 @@ class Round5Spec extends SparkTestBase {
       .toDF("src", "dst", "w")
     val hot = Skew.hotKeys(edges, "src", parts = 4, minDeg = 8)
     assert(hot == Seq("the"))
-    val salted = Skew.saltEdges(edges, hot, salts = 4)
-    assert(salted.filter(col("src") === "the").select("salt").distinct().count() > 1)
-    assert(salted.filter(col("src") =!= "the").filter(col("salt") =!= 0).count() == 0)
-    val st = Skew.saltState(Seq(("the", 1.0), ("fox", 2.0)).toDF("id", "r"), "id", hot, 4)
-    assert(st.filter(col("id") === "the").count() == 4)
-    assert(st.filter(col("id") === "fox").count() == 1)
     // end-to-end: the textrank-shaped call (string vertices, weighted, skew on)
     val pr = graft.algos.PageRank.run(spark, edges, maxIter = 5, tol = 0.0,
       skewSalts = 8, weighted = true).ranks

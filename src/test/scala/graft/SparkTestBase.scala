@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GBMatrix
@@ -28,6 +30,30 @@ object SparkTestBase {
 
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val marker = "jobs-during-marker"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      // listener events arrive in posting order: once the marker job shows
+      // up, every job `body` started has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(marker), "listener never saw the marker job")
+      (a, jobs.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
 
   // --- converters between the dense mimic's Map form and DataFrames ---------
 

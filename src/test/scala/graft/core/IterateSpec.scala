@@ -1,8 +1,6 @@
 package graft.core
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -24,30 +22,6 @@ class IterateSpec extends SparkTestBase {
       checkpoint = checkpoint)(inc)((_, row) => row.getLong(0) >= stopAt)
 
   private def maxOf(df: DataFrame): Long = df.agg(max(col("v"))).head.getLong(0)
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val marker = "iterate-spec-marker"
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      // listener events arrive in posting order: once the marker job shows
-      // up, every job `body` started has been counted
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains(marker), "listener never saw the marker job")
-      (a, jobs.size - 1)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("fixpoint stops on done or at maxIter, and reports every iteration") {
     val stopped = run(10, stopAt = 3L)
