@@ -221,7 +221,7 @@ object SCC {
       .select(col("scc_src").as("src"), col("scc_dst").as("dst"))
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the [[Toposort]] layering; a DAG by construction, so the bound is slack
+    // Toposort's layering; a DAG by construction, so the bound is slack
     val lvls = Toposort.layers(dag, parts, maxIter = 100000)
       .select(col("id").as("scc"), col("layer").as("level"))
     // components touched by no inter-component edge are sources at level 0
