@@ -70,6 +70,9 @@ private[algos] object Relax {
             coalesce(better, lit(false)).as("chg"): _*)
         val added = nv.join(state, Seq("id"), "left_anti")
           .select(col("id") +: vals.map(v => field(v).as(v)) :+ lit(true).as("chg"): _*)
+        // both sides are laid out by id and Spark's union keeps a layout its
+        // children share, so the keyed cut takes the merge as it is (a full
+        // outer join would not report one and would be cut twice)
         kept.unionByName(added)
     } { (_, row) => Iterate.long(row, 0) == 0L })
   }
