@@ -52,19 +52,6 @@ object BenchExtra {
         .select(col("a.sk").as("src"), col("b.sk").as("dst")).distinct()
         .withColumn("w", lit(1.0))
     }
-    def lpaRound(s: SS, und: DataFrame, parts: Int): DataFrame = {
-      val vertices = und.select(col("src").as("id")).distinct()
-      val labels = graft.core.Iterate.cutKeyed(
-        vertices.select(col("id"), col("id").as("label")), parts, "id")
-      val hist = und
-        .join(labels.select(col("id").as("src"), col("label").as("l")), Seq("src"))
-        .groupBy(col("dst"), col("l")).agg(count(lit(1)).as("cnt"))
-      val best = hist.groupBy(col("dst").as("id"))
-        .agg(max(struct(col("cnt"), negate(col("l")).as("nl"))).as("m"))
-        .select(col("id"), negate(col("m.nl")).as("nlabel"))
-      labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nlabel"), col("label")).as("label"))
-    }
 
     Map(
       "algo_tricount_core" -> ((s, d) =>
@@ -83,27 +70,6 @@ object BenchExtra {
       }),
       "edges_sup" -> ((s, d) => SparkEntry.edgesSup(s, d)),
       "edges_sup_r5" -> ((s, d) => edgesSupR5(s, d)),
-      // one LPA round over the NEW src-keyed layout vs the r5 dst-keyed one
-      "algo_labelprop_round" -> ((s, d) => {
-        val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val e = SparkEntry.edgesSup(s, d)
-        val und = e.select(col("src"), col("dst"))
-          .union(e.select(col("dst").as("src"), col("src").as("dst")))
-          .repartition(parts, col("src")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        und.count()
-        lpaRound(s, und, parts)
-      }),
-      "algo_labelprop_round_r5" -> ((s, d) => {
-        val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val e = edgesSupR5(s, d)
-        val und = e.select(col("src"), col("dst"))
-          .union(e.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct().repartition(parts, col("dst"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        und.count()
-        lpaRound(s, und, parts)
-      }),
       // CC/BFS/LPA setup fusion: repartition-then-distinct (1 exchange) vs
       // r5's distinct-then-repartition (2)
       "cc_setup" -> ((s, d) => {

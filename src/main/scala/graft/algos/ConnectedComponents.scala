@@ -146,8 +146,8 @@ object ConnectedComponents {
       // neighbor-min gather: min.second semiring vxm over the adjacency
       val labT = labels.select(col("id").as("src"), col("comp").as("c"))
       val gathered = undHot match {
-        case None => und.join(labT, Seq("src"))
-        case Some(h) => und.join(labT, Seq("src")).unionByName(
+        case None => Iterate.gather(und, labT)
+        case Some(h) => Iterate.gather(und, labT).unionByName(
           h.join(broadcast(labT.filter(col("src").isin(hot: _*))), Seq("src")))
       }
       val neighborMin = gathered

@@ -10,10 +10,14 @@ import graft.core.Iterate
   * broken by the SMALLEST label so the whole run is deterministic and exactly
   * reproducible (SURVEY.md §2.10 "deterministic min tie-break").
   *
-  * Each round = one join (gather neighbor labels) + one two-level hash-agg
-  * (count per (vertex,label), then max_by with min-label tie-break). The
-  * count-then-argmax is the semiring view: plus.pair to count, max.second
-  * with tie-break to pick — all shuffle-partial-aggregated by Spark.
+  * Each round ([[round]]) = one co-partitioned gather of neighbor labels
+  * ([[Iterate.gather]]), ONE exchange laying the gathered (dst, label) rows
+  * out by dst, and in the stage that reads them the two stacked hash
+  * aggregates: count per (dst, label), then the per-dst argmax — max count,
+  * ties to the smallest label. The count-then-argmax is the semiring view:
+  * plus.pair to count, max.second with tie-break to pick. Both aggregates
+  * are Spark's spillable hash aggregates, so a hub's histogram never has to
+  * fit in one map (as `mode()`'s per-group map would).
   * Synchronous LPA can 2-cycle on bipartite-ish structures, so the loop also
   * stops after `maxIter` (reported fixpoint-or-maxit, like pagerank.m's
   * convergence warning).
@@ -56,22 +60,32 @@ object LabelPropagation {
     val fp = Iterate.fixpoint(vertices.select(col("id"), col("id").as("label")),
       parts, Seq("id"), maxIter,
       metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("changed")),
-      checkpoint = snapshots) { (labels, _, _) =>
-      // histogram of neighbor labels per vertex...
-      val hist = und
-        .join(labels.select(col("id").as("src"), col("label").as("l")), Seq("src"))
-        .groupBy(col("dst"), col("l")).agg(count(lit(1)).as("cnt"))
-      // ...then deterministic argmax: max count, then min label. max_by with a
-      // composite orderable key: struct(cnt, -l) compares lexicographically.
-      val best = hist.groupBy(col("dst").as("id"))
-        .agg(max(struct(col("cnt"), negate(col("l")).as("nl"))).as("m"))
-        .select(col("id"), negate(col("m.nl")).as("nlabel"))
-      labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nlabel"), col("label")).as("label"),
-          (coalesce(col("nlabel"), col("label")) =!= col("label")).as("chg"))
-    } { (_, row) => Iterate.long(row, 0) == 0 }
+      checkpoint = snapshots)((labels, _, _) => round(und, labels, parts)) {
+      (_, row) => Iterate.long(row, 0) == 0 }
     und.unpersist(false)
     fp.state.select(col("id"), col("label"))
+  }
+
+  /** One synchronous round over the symmetrized, hash(src)-partitioned
+    * adjacency `und` and the cut label state (id, label): the next
+    * (id, label, chg). Every (dst, label) pair lands in the partition of its
+    * dst, and hash(dst) satisfies both the (dst, label) grouping and the dst
+    * grouping (subset rule, as in the setup's repartition→distinct), so the
+    * round has one exchange; the result stays hash(id) for the keyed cut.
+    * The tie-break keys on bitwise_not(label), which reverses the order of
+    * every integer without the overflow of negating the minimum value.
+    */
+  private[algos] def round(und: DataFrame, labels: DataFrame, parts: Int): DataFrame = {
+    val gathered = Iterate.gather(und, labels.select(col("id").as("src"), col("label").as("l")))
+      .select(col("dst").as("id"), col("l"))
+      .repartition(parts, col("id"))
+    val best = gathered.groupBy(col("id"), col("l")).agg(count(lit(1)).as("cnt"))
+      .groupBy(col("id"))
+      .agg(max(struct(col("cnt"), bitwise_not(col("l")).as("nl"))).as("m"))
+      .select(col("id"), bitwise_not(col("m.nl")).as("nlabel"))
+    labels.join(best, Seq("id"), "left")
+      .select(col("id"), coalesce(col("nlabel"), col("label")).as("label"),
+        (coalesce(col("nlabel"), col("label")) =!= col("label")).as("chg"))
   }
 
   /** Fixed-iteration-count variant: at most `k` synchronous rounds of

@@ -226,14 +226,14 @@ object PageRank {
         // grouped: co-partitioned join probes one row per src, the dst array
         // explodes inside the same stage straight into the partial hash-agg
         val coldGrouped =
-          if (grouped) adj.join(stateT, Seq("src"))
+          if (grouped) Iterate.gather(adj, stateT)
             .select(explode(col("dsts")).as("dst"), col("t").as("c"))
-          else adj.join(stateT, Seq("src")).select(col("dst"), term.as("c"))
+          else Iterate.gather(adj, stateT).select(col("dst"), term.as("c"))
         // over-cap srcs gather as flat per-edge rows (co-partitioned join too)
         val coldGather = adjRest match {
           case None => coldGrouped
           case Some(r) => coldGrouped.unionByName(
-            r.join(stateT, Seq("src")).select(col("dst"), col("t").as("c")))
+            Iterate.gather(r, stateT).select(col("dst"), col("t").as("c")))
         }
         val gathered = adjHot match {
           case None => coldGather

@@ -59,11 +59,11 @@ private[algos] object Relax {
         maxIter, metrics = Seq(sum(when(col("chg"), 1L).otherwise(0L)).as("n")),
         checkpoint = checkpoint.copy(cols = "id" +: vals, resume = allChanged)) {
       (state, _, _) =>
-        // the hint keeps a tiny adjacency from being broadcast (a second job
-        // every round); the frontier side is already on the src partitioning
+        // the frontier keeps the state's layout, so the gather is
+        // co-partitioned (Iterate.gather: no re-broadcast adjacency)
         val frontier = state.filter(col("chg"))
-          .select(col("id").as("src") +: vals.map(col): _*).hint("shuffle_hash")
-        val nv = adj.join(frontier, Seq("src")).filter(gate)
+          .select(col("id").as("src") +: vals.map(col): _*)
+        val nv = Iterate.gather(adj, frontier).filter(gate)
           .groupBy(col("dst").as("id")).agg(add.as("nv"))
         val kept = state.join(nv, Seq("id"), "left")
           .select(col("id") +: vals.map(v => when(better, field(v)).otherwise(col(v)).as(v)) :+

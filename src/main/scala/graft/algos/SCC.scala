@@ -53,8 +53,20 @@ object SCC {
   /** run() that also reports the number of outer (trim+color+sweep) rounds. */
   def runCounted(spark: SparkSession, edges: DataFrame, maxOuter: Int = 256,
                  numPartitions: Int = 0, maxTrim: Int = 16): (DataFrame, Int) =
-    Iterate.withoutAQE(spark)(runLoop(spark, edges, maxOuter, numPartitions, maxTrim))
+    Iterate.withoutAQE(spark)(runLoop(spark, edges, maxOuter, numPartitions, maxTrim)) match {
+      case (assigned, outer) => (normalized(assigned), outer)
+    }
 
+  /** (id, scc) from the cut (id, root) assignment: the component label is
+    * the min member id (an exact, engine-independent contract; the pivot id
+    * was an artifact of max-coloring).
+    */
+  private def normalized(assigned: DataFrame): DataFrame = {
+    val rep = assigned.groupBy("root").agg(min(col("id")).as("scc"))
+    assigned.join(rep, Seq("root")).select(col("id"), col("scc"))
+  }
+
+  /** The cut (id, root) assignment of every vertex, and the outer rounds. */
   private def runLoop(spark: SparkSession, edges: DataFrame, maxOuter: Int,
                       numPartitions: Int, maxTrim: Int): (DataFrame, Int) = {
     val parts = Iterate.partitions(spark, numPartitions)
@@ -195,12 +207,8 @@ object SCC {
     }
     require(nActive == 0, s"SCC did not converge in $maxOuter outer rounds")
 
-    // normalize the component label to the min member id (exact, engine-
-    // independent contract; the pivot id was an artifact of max-coloring)
-    val rep = assigned.groupBy("root").agg(min(col("id")).as("scc"))
-    val out = assigned.join(rep, Seq("root")).select(col("id"), col("scc"))
     e0.unpersist(false)
-    (out, outer)
+    (assigned, outer)
   }
 
   /** Condensation of the directed graph: contract every SCC to one vertex
@@ -215,21 +223,21 @@ object SCC {
   def condense(spark: SparkSession, edges: DataFrame,
                numPartitions: Int = 0): DataFrame = {
     val parts = Iterate.partitions(spark, numPartitions)
-    val scc = run(spark, edges, numPartitions = parts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val assigned = assignment(spark, edges, parts)
+    val scc = normalized(assigned).persist(StorageLevel.MEMORY_AND_DISK)
     val dag = dagEdges(scc, edges)
       .select(col("scc_src").as("src"), col("scc_dst").as("dst"))
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Toposort's layering; a DAG by construction, so the bound is slack
-    val lvls = Toposort.layers(dag, parts, maxIter = 100000)
-      .select(col("id").as("scc"), col("layer").as("level"))
+    val layered = Toposort.layers(dag, parts, maxIter = 100000)
     // components touched by no inter-component edge are sources at level 0
     val out = scc.select(col("scc")).distinct()
-      .join(lvls, Seq("scc"), "left")
+      .join(layered.select(col("id").as("scc"), col("layer").as("level")), Seq("scc"), "left")
       .select(col("scc"), coalesce(col("level"), lit(0L)).as("level"))
     out.cache(); out.count()
     scc.unpersist(false); dag.unpersist(false)
+    Iterate.free(assigned); Iterate.free(layered)
     out
   }
 
@@ -239,13 +247,17 @@ object SCC {
   def condenseEdges(spark: SparkSession, edges: DataFrame,
                     numPartitions: Int = 0): DataFrame = {
     val parts = Iterate.partitions(spark, numPartitions)
-    val scc = run(spark, edges, numPartitions = parts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val assigned = assignment(spark, edges, parts)
+    val scc = normalized(assigned).persist(StorageLevel.MEMORY_AND_DISK)
     val out = dagEdges(scc, edges).cache()
     out.count()
-    scc.unpersist(false)
+    scc.unpersist(false); Iterate.free(assigned)
     out
   }
+
+  /** [[runLoop]]'s assignment with the default round caps. */
+  private def assignment(spark: SparkSession, edges: DataFrame, parts: Int): DataFrame =
+    Iterate.withoutAQE(spark)(runLoop(spark, edges, 256, parts, 16))._1
 
   private def dagEdges(scc: DataFrame, edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst")).distinct()

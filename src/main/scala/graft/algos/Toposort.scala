@@ -41,7 +41,7 @@ object Toposort {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val layer = layers(adj, parts, maxIter)
+    val layer = layers(adj, parts, maxIter).select(col("id"), col("layer"))
     adj.unpersist(false)
     // total order: rank by (layer, id). A single global sort — fine for the
     // condensed-DAG scope; at raw-graph scale emit `layer` alone and let the
@@ -51,9 +51,11 @@ object Toposort {
         .orderBy(col("layer"), col("id"))).cast("long"))
   }
 
-  /** (id, layer) over the src-partitioned DAG adjacency `adj` (src, dst):
-    * every vertex starts at layer 0 and takes 1 + the max layer of its
-    * predecessors. Raises when `maxIter` rounds do not reach the fixpoint.
+  /** The cut (id, layer, chg) state over the src-partitioned DAG adjacency
+    * `adj` (src, dst): every vertex starts at layer 0 and takes 1 + the max
+    * layer of its predecessors. Raises when `maxIter` rounds do not reach
+    * the fixpoint. A caller that materializes what it derives from the
+    * state frees it after ([[Iterate.free]]).
     */
   private[algos] def layers(adj: DataFrame, parts: Int, maxIter: Int): DataFrame = {
     val verts = adj.select(col("src").as("id"))
@@ -61,6 +63,6 @@ object Toposort {
     val fp = Relax(adj, verts.select(col("id"), lit(0L).as("layer")), parts, maxIter,
       maximize = true)(col("layer") + 1L)
     require(Relax.settled(fp), s"Toposort: no fixpoint after $maxIter rounds — cycle in input?")
-    fp.state.select(col("id"), col("layer"))
+    fp.state
   }
 }

@@ -55,6 +55,21 @@ object Iterate {
     if (numPartitions > 0) numPartitions
     else spark.conf.get("spark.sql.shuffle.partitions").toInt
 
+  /** The gather join of a round: the cached, hash(src)-partitioned
+    * adjacency `adj` ⋈ the cut `state` (keyed on `src`) on `src`.
+    *
+    * The `shuffle_hash` hint on the state is what keeps this join
+    * co-partitioned. A cut state is a `LogicalRDD` with no statistics, while
+    * the cached adjacency reports its real size, so without the hint the
+    * planner takes a small adjacency for the cheap side: every round it
+    * would collect the whole adjacency to the driver, build a hash relation
+    * and broadcast it — one extra job per round — instead of using the
+    * layout both sides already share. With the hint both sides stay where
+    * they are and the state is the hash side.
+    */
+  def gather(adj: DataFrame, state: DataFrame): DataFrame =
+    adj.join(state.hint("shuffle_hash"), Seq("src"))
+
   /** Eagerly materialize `df` (one job over its — usually co-partitioned —
     * inputs) and return a frame whose plan is a leaf over the cached blocks.
     */

@@ -4,10 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.classic.{Dataset => CDataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
+import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SQLExecutionRDD}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.storage.StorageLevel
 
 /** Spark-internal bridge (hence the org.apache.spark.sql package): a
@@ -20,12 +21,13 @@ import org.apache.spark.storage.StorageLevel
   * on the `LogicalRDD`, so co-partitioned joins and aggregations on the keys
   * skip their exchanges entirely.
   *
-  * The declared partitioning is never assumed: after materialization the
-  * final physical plan's output partitioning is inspected, and only if it
-  * already IS hash(keys, parts) do we declare it directly; otherwise the
-  * rows are laid out with an explicit `repartition(parts, keys)` — an
-  * exchange whose layout is exact and which AQE never coalesces because the
-  * partition count is user-specified.
+  * The declared partitioning is never assumed. When the physical plan does
+  * not report hash(keys, parts), a hash exchange on the keys is put on top
+  * of that same plan before it runs, so the rows are laid out in the one
+  * run. When it does report it, the plan runs as it is, and an adaptive
+  * plan's final layout is checked after the run: if re-planning lost the
+  * layout, the rows are laid out by a second run behind an explicit
+  * exchange (partition count user-specified, so AQE never coalesces it).
   */
 object GraftSqlInternals {
 
@@ -39,30 +41,67 @@ object GraftSqlInternals {
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   def cutHashPartitioned(df: DataFrame, parts: Int, keys: Seq[String]): DataFrame = {
-    val attempt = materialize(df, parts, keys)
-    attempt match {
-      case Some(cutDf) => cutDf
-      case None =>
-        val cds = df.asInstanceOf[CDataset[Row]]
-        val laid = cds.repartition(parts, keys.map(df.col): _*)
-        // last resort (exotic partitioning report): plain eager checkpoint —
-        // correct, merely without the declared-partitioning fast path
-        materialize(laid, parts, keys).getOrElse(laid.localCheckpoint(true))
-    }
-  }
-
-  /** Execute + cache; Some(leaf frame) if the final physical layout is
-    * hash(keys, parts), None otherwise (caller re-lays-out explicitly).
-    */
-  private def materialize(df: DataFrame, parts: Int, keys: Seq[String]): Option[DataFrame] = {
     val cds = df.asInstanceOf[CDataset[Row]]
     val session = cds.sparkSession
     val qe = cds.queryExecution
     val output = qe.analyzed.output
     val keyAttrs: Seq[Attribute] = keys.map(k => output.find(_.name == k).getOrElse(
       throw new IllegalArgumentException(s"no column $k in ${output.map(_.name)}")))
-    val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val layout = HashPartitioning(keyAttrs, parts)
+    def exchanged(plan: SparkPlan): SparkPlan =
+      session.withActive(ShuffleExchangeExec(layout, plan, REPARTITION_BY_NUM))
+    def leaf(rdd: RDD[InternalRow]): DataFrame = CDataset.ofRows(session,
+      LogicalRDD(output, rdd, layout, Nil, false)(session))
+
+    val planned = qe.executedPlan
+    if (!laidOut(planned, layout)) {
+      // the plan cannot produce the layout: lay its rows out in the same
+      // run. The exchange sits on the frame's OWN physical plan, so its
+      // observed metrics are still filled by this one run.
+      leaf(materialize(exchanged(planned), session))
+    } else {
+      val rdd = materialize(planned, session)
+      // an adaptive plan may have re-planned away the layout it reported
+      if (laidOut(planned, layout)) leaf(rdd)
+      else {
+        rdd.unpersist(false)
+        // a fresh plan, so the observed metrics of the run above stand
+        val again = CDataset.ofRows(session, qe.analyzed).queryExecution.executedPlan
+        leaf(materialize(exchanged(again), session))
+      }
+    }
+  }
+
+  /** Whether `plan` (an adaptive plan: its current physical plan — the
+    * initial one before it runs, the final one after) reports `layout`. A
+    * PartitioningCollection (e.g. hash(id) or hash(comp) when comp aliases
+    * id) matches when any member does.
+    */
+  private def laidOut(plan: SparkPlan, layout: HashPartitioning): Boolean = {
+    val current = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def flatten(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(flatten)
+      case other => Seq(other)
+    }
+    flatten(current.outputPartitioning).exists {
+      case h: HashPartitioning =>
+        h.numPartitions == layout.numPartitions &&
+          h.expressions.length == layout.expressions.length &&
+          h.expressions.zip(layout.expressions).forall {
+            case (e: Attribute, k: Attribute) => e.exprId == k.exprId
+            case _ => false
+          }
+      case _ => false
+    }
+  }
+
+  /** Run `plan` once and cache its rows, lineage truncated. */
+  private def materialize(plan: SparkPlan, session: SparkSession): RDD[InternalRow] = {
+    val rdd = new SQLExecutionRDD(plan.execute(), session.sessionState.conf)
+      .map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     // Truncate RDD lineage (keeps the cached blocks and the partitioner).
     // The declared-partitioning leaves make successive iterations NARROW
     // dependencies of each other, so without truncation the task object
@@ -70,35 +109,6 @@ object GraftSqlInternals {
     // die in task (de)serialization with StackOverflowError.
     rdd.localCheckpoint()
     rdd.count() // eager: the loop must not re-run the producing plan
-
-    val finalPlan = qe.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    // the plan may report a PartitioningCollection (e.g. hash(id) or
-    // hash(comp) when comp aliases id) — any member matching the keys works
-    def flatten(p: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
-        : Seq[org.apache.spark.sql.catalyst.plans.physical.Partitioning] = p match {
-      case c: org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection =>
-        c.partitionings.flatMap(flatten)
-      case other => Seq(other)
-    }
-    val ok = flatten(finalPlan.outputPartitioning).exists {
-      case h: HashPartitioning =>
-        h.numPartitions == parts &&
-          h.expressions.length == keyAttrs.length &&
-          h.expressions.zip(keyAttrs).forall {
-            case (e: Attribute, k) => e.exprId == k.exprId
-            case _ => false
-          }
-      case _ => false
-    }
-    if (ok) {
-      val lr = LogicalRDD(output, rdd, HashPartitioning(keyAttrs, parts), Nil, false)(session)
-      Some(CDataset.ofRows(session, lr))
-    } else {
-      rdd.unpersist(false)
-      None
-    }
+    rdd
   }
 }

@@ -669,6 +669,20 @@ class Round4LinkSpec extends SparkTestBase {
     assert(dag == Set((0L, 10L), (10L, 20L), (20L, 21L)))
   }
 
+  test("condense leaves only its output cached") {
+    import spark.implicits._
+    val es = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 10L), (10L, 11L),
+      (11L, 10L), (11L, 20L)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = graft.algos.SCC.condense(spark, es)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 0L, 10L -> 1L, 20L -> 2L))
+    out.unpersist(true)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("Eigenvector matches brute L1-normalized power iteration") {
     val es = randGraph(35, 0.15, 91L)
     val adj = adjOf(es)

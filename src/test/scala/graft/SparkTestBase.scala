@@ -55,6 +55,13 @@ trait SparkTestBase extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Jobs `rounds(5)` starts beyond `rounds(2)`: what 3 extra rounds cost. */
+  def extraJobs(rounds: Int => Any): Int = {
+    val (_, j2) = jobsDuring(rounds(2))
+    val (_, j5) = jobsDuring(rounds(5))
+    j5 - j2
+  }
+
   // --- converters between the dense mimic's Map form and DataFrames ---------
 
   def toMatrix(m: Map[(Long, Long), Double]): GBMatrix =

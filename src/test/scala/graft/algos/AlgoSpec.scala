@@ -176,6 +176,18 @@ class AlgoSpec extends SparkTestBase {
     }
   }
 
+  test("label propagation takes the minimum id as a label without overflow") {
+    import spark.implicits._
+    // 5's neighbours are the minimum id and 7: a tie, won by the minimum
+    val longs = Seq((Long.MinValue, 5L), (7L, 5L)).toDF("src", "dst")
+    val ints = Seq((Int.MinValue, 5), (7, 5)).toDF("src", "dst")
+    for ((edges, min) <- Seq(longs -> Long.MinValue, ints -> Int.MinValue.toLong)) {
+      val got = LabelPropagation.runFixed(spark, edges, k = 1).collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toMap
+      assert(got(5L) == min, s"got $got")
+    }
+  }
+
   test("BellmanFord: negative edges vs brute replica; fixpoint; cycle flag") {
     import spark.implicits._
     // signed weights via potentials (telescoping => no negative cycle)

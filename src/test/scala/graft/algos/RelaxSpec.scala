@@ -19,13 +19,8 @@ class RelaxSpec extends SparkTestBase {
 
   test("BFS, SSSP and Bowtie reach run one Spark job per extra round") {
     val edges = path(20)
-    def extra(rounds: Int => Any): Int = {
-      val (_, j2) = jobsDuring(rounds(2))
-      val (_, j5) = jobsDuring(rounds(5))
-      j5 - j2
-    }
-    assert(extra(k => BFS.run(spark, edges, 0L, maxIter = k)) == 3)
-    assert(extra(k => SSSP.run(spark, edges, 0L, maxIter = k)) == 3)
+    assert(extraJobs(k => BFS.run(spark, edges, 0L, maxIter = k)) == 3)
+    assert(extraJobs(k => SSSP.run(spark, edges, 0L, maxIter = k)) == 3)
 
     // reach closes one round after the last vertex: rounds = path length + 1
     val parts = Iterate.partitions(spark, 0)
@@ -36,7 +31,7 @@ class RelaxSpec extends SparkTestBase {
       Iterate.free(seen)
       adj.unpersist(false)
     }
-    assert(extra(reach) == 3)
+    assert(extraJobs(reach) == 3)
   }
 
   test("path algorithms give the same answers on shifted id ranges") {

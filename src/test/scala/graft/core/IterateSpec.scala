@@ -131,6 +131,34 @@ class IterateSpec extends SparkTestBase {
     intercept[IllegalArgumentException](Iterate.Snapshots(None, 0, Nil))
   }
 
+  test("cutKeyed of an unlaid-out frame runs its plan once, observations kept") {
+    val plain = spark.range(1000).select(col("id"), (col("id") % 7L).as("v"))
+    def cutJobs(df: DataFrame): Int = {
+      val (cut, jobs) = jobsDuring(Iterate.cutKeyed(df, 4, "id"))
+      assert(cut.count() == 1000L)
+      Iterate.free(cut)
+      jobs
+    }
+    for (aqe <- Seq("false", "true")) {
+      val key = "spark.sql.adaptive.enabled"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, aqe)
+      try {
+        val laid = cutJobs(plain.repartition(4, col("id")))
+        val unlaid = cutJobs(plain)
+        // AQE runs the pre-repartitioned frame's shuffle as a job of its own
+        if (aqe == "false") assert(unlaid == laid, s"unlaid $unlaid, laid $laid")
+        else assert(unlaid <= laid, s"AQE: unlaid $unlaid, laid $laid")
+      } finally spark.conf.set(key, prev)
+    }
+
+    // the exchange sits on the frame's own plan, so its observation is filled
+    val observed = plain.observe("unlaid", max(col("v")).as("mx"), count(lit(1)).as("n"))
+    val cut = Iterate.cutKeyed(observed, 4, "id")
+    assert(Iterate.observedRow(observed, "unlaid")(fail("absent")) == Row(6L, 1000L))
+    Iterate.free(cut)
+  }
+
   test("partitions: numPartitions when positive, else spark.sql.shuffle.partitions") {
     assert(Iterate.partitions(spark, 7) == 7)
     assert(Iterate.partitions(spark, 0) ==
